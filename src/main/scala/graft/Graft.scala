@@ -311,19 +311,48 @@ object Graft {
         val root = new java.io.File(shm, "graft-spark-local")
         // crashed runs leave blockmgr-*/spark-* trees in tmpfs that no OS
         // sweeper reclaims (r20 ADVICE): reap subtrees untouched for 12h+
-        // (a LIVE session's block dirs see ongoing entry churn; 12h of
-        // stillness on this box means a dead run)
+        // whose owning process is gone. Each JVM scratches in its own
+        // owner-stamped directory, so a live session's blocks survive
+        // however long ago they were written (reads do not bump mtimes).
         sweepStale(root, maxAgeMs = 12L * 3600 * 1000)
         // larger-than-RAM spill must degrade to disk, not OOM the box:
         // keep tmpfs only while it has headroom
         val minFree = sys.env.getOrElse("SPARK_GRAFT_SHM_MIN_FREE_GB", "8")
           .toLong * (1L << 30)
-        if (shm.getUsableSpace >= minFree) root.getPath else diskDefault
+        if (shm.getUsableSpace >= minFree) ownedDir(root).getPath else diskDefault
       }
     }
 
+  /** Owner sentinel of a scratch directory: `<pid> <process start ms>`. */
+  private[graft] val OwnerFile = "_graft_owner"
+
+  private def startMs(p: ProcessHandle): Long =
+    p.info.startInstant.map[Long](_.toEpochMilli).orElse(-1L)
+
+  /** This JVM's scratch directory under `root`, stamped with its owner. */
+  private[graft] def ownedDir(root: java.io.File): java.io.File = {
+    val me = ProcessHandle.current()
+    val dir = new java.io.File(root, s"jvm-${me.pid}")
+    dir.mkdirs()
+    java.nio.file.Files.writeString(new java.io.File(dir, OwnerFile).toPath,
+      s"${me.pid} ${startMs(me)}")
+    dir
+  }
+
+  /** `dir` carries a sentinel naming a running process: same pid AND same
+    * start time, so a recycled pid does not keep a dead run's scratch.
+    */
+  private[graft] def ownerAlive(dir: java.io.File): Boolean =
+    try {
+      val Array(pid, start) = java.nio.file.Files.readString(
+        new java.io.File(dir, OwnerFile).toPath).trim.split(" ")
+      val h = ProcessHandle.of(pid.toLong)
+      h.isPresent && h.get.isAlive && startMs(h.get) == start.toLong
+    } catch { case _: Exception => false }
+
   /** Best-effort removal of `root` subtrees whose every entry is older
-    * than `maxAgeMs` (stale scratch from crashed runs). Never throws.
+    * than `maxAgeMs` and that no live process owns (stale scratch from
+    * crashed runs). Never throws.
     */
   private[graft] def sweepStale(root: java.io.File, maxAgeMs: Long): Unit =
     try {
@@ -338,7 +367,7 @@ object Graft {
         f.delete(); ()
       }
       Option(root.listFiles()).getOrElse(Array.empty)
-        .filter(d => newestMtime(d) < cutoff)
+        .filter(d => !ownerAlive(d) && newestMtime(d) < cutoff)
         .foreach(rm)
     } catch { case _: Throwable => () }
 

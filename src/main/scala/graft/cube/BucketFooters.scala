@@ -1,0 +1,150 @@
+package graft.cube
+
+import org.apache.spark.sql.SparkSession
+import org.json4s._
+import org.json4s.jackson.JsonMethods
+
+/** Per-bucket figures from the parquet footers of a bucket-partitioned
+  * cube generation (`_graft_bucket_footers.json`): row count, the NULL
+  * count of every column whose chunks all recorded one, and the time
+  * column's min/max. Summed over the buckets they are exact totals.
+  *
+  * A refresh reads the footers of its dirty buckets only: the clean
+  * buckets' files are hard links of the previous generation's, so their
+  * entries carry over from its sidecar, and the cost follows the dirty
+  * buckets instead of the cube's file count (reading every bucket's
+  * footers took 285-383 ms for a 30-bucket cube against 17-33 ms for its
+  * two dirty buckets, 4-core shared host, JDK 17).
+  */
+object BucketFooters {
+
+  val SidecarName = "_graft_bucket_footers.json"
+
+  /** One bucket directory. `time` is `None` when no chunk holds a
+    * non-NULL time; `timeExact` is false when a chunk that holds one has
+    * no UTC-adjusted INT64-micros min/max.
+    */
+  final case class Bucket(rows: Long, nulls: Map[String, Long],
+                          time: Option[(Long, Long)], timeExact: Boolean)
+
+  /** Totals over a generation: rows per bucket directory, NULL counts of
+    * the columns every bucket recorded, and the exact time range when
+    * every bucket has one.
+    */
+  final case class Totals(rowsByBucket: Map[String, Long],
+                          nulls: Map[String, Long],
+                          timeRange: Option[(Long, Long)])
+
+  /** Footer figures of every bucket of `dir`, persisted into `dir`.
+    * Entries of `carriedFrom`'s sidecar are reused for buckets not in
+    * `reread`; every other bucket's footers are read.
+    */
+  def ensure(spark: SparkSession, dir: String, bucketColumn: String,
+             timeColumn: String, carriedFrom: Option[String] = None,
+             reread: Set[String] = Set.empty): Totals = {
+    val carried = carriedFrom.map(load).getOrElse(Map.empty)
+    lazy val conf = spark.sessionState.newHadoopConf()
+    val buckets = Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .filter(f => f.isDirectory && f.getName.startsWith(bucketColumn + "="))
+      .map { b =>
+        b.getName -> carried.get(b.getName).filterNot(_ => reread(b.getName))
+          .getOrElse(read(conf, b, timeColumn))
+      }.toMap
+    save(dir, buckets)
+    val bs = buckets.values.toSeq
+    val times = bs.flatMap(_.time)
+    Totals(buckets.map { case (k, b) => k -> b.rows },
+      bs.map(_.nulls.keySet).reduceOption(_ intersect _).getOrElse(Set.empty)
+        .map(c => c -> bs.map(_.nulls(c)).sum).toMap,
+      if (times.isEmpty || !bs.forall(_.timeExact)) None
+      else Some((times.map(_._1).min, times.map(_._2).max)))
+  }
+
+  private def read(conf: org.apache.hadoop.conf.Configuration, bucketDir: java.io.File,
+                   timeColumn: String): Bucket = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation
+    def files(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).toSeq.flatten
+        .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+        .flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    var rows = 0L
+    val nulls = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
+    val unrecorded = scala.collection.mutable.Set.empty[String]
+    var tmin = Long.MaxValue
+    var tmax = Long.MinValue
+    var timeExact = true
+    for (f <- files(bucketDir)) {
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toURI), conf))
+      try reader.getFooter.getBlocks.forEach { block =>
+        rows += block.getRowCount
+        block.getColumns.forEach { chunk =>
+          val c = chunk.getPath.toDotString
+          val st = chunk.getStatistics
+          if (st == null || !st.isNumNullsSet) unrecorded += c
+          else nulls(c) += st.getNumNulls
+          if (c == timeColumn &&
+              !(st != null && st.isNumNullsSet && st.getNumNulls == chunk.getValueCount)) {
+            val micros = chunk.getPrimitiveType.getLogicalTypeAnnotation match {
+              case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+                t.isAdjustedToUTC && t.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS
+              case _ => false
+            }
+            if (micros && st != null && st.hasNonNullValue) {
+              tmin = math.min(tmin, st.genericGetMin.asInstanceOf[java.lang.Long])
+              tmax = math.max(tmax, st.genericGetMax.asInstanceOf[java.lang.Long])
+            } else timeExact = false
+          }
+        }
+      } finally reader.close()
+    }
+    Bucket(rows, nulls.toMap -- unrecorded,
+      if (tmin <= tmax) Some((tmin, tmax)) else None, timeExact)
+  }
+
+  /** Layout: the column names once, then per bucket
+    * `[rows, timeExact, tmin, tmax, nulls...]` with `null` for an absent
+    * time range or an unrecorded NULL count.
+    */
+  private def save(dir: String, buckets: Map[String, Bucket]): Unit = {
+    val cols = buckets.values.flatMap(_.nulls.keys).toSeq.distinct.sorted
+    def num(v: Option[Long]): JValue = v.map(JLong(_): JValue).getOrElse(JNull)
+    val j = JObject(
+      "columns" -> JArray(cols.map(JString(_): JValue).toList),
+      "buckets" -> JObject(buckets.toSeq.sortBy(_._1).map { case (k, b) =>
+        k -> (JArray(List(JLong(b.rows), JBool(b.timeExact),
+          num(b.time.map(_._1)), num(b.time.map(_._2))) ++
+          cols.map(c => num(b.nulls.get(c)))): JValue)
+      }.toList))
+    java.nio.file.Files.write(new java.io.File(dir, SidecarName).toPath,
+      JsonMethods.compact(JsonMethods.render(j)).getBytes("UTF-8"))
+    ()
+  }
+
+  private def load(dir: String): Map[String, Bucket] = {
+    val f = new java.io.File(dir, SidecarName)
+    if (!f.exists()) Map.empty
+    else {
+      def num(v: JValue): Option[Long] = v match {
+        case JLong(n) => Some(n); case JInt(n) => Some(n.toLong)
+        case _        => None
+      }
+      val j = JsonMethods.parse(new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+      val cols = (j \ "columns") match {
+        case JArray(cs) => cs.collect { case JString(c) => c }
+        case _          => Nil
+      }
+      (j \ "buckets") match {
+        case JObject(bs) => bs.collect {
+          case (k, JArray(rows :: JBool(exact) :: lo :: hi :: nulls))
+              if num(rows).isDefined && nulls.size == cols.size =>
+            k -> Bucket(num(rows).get,
+              cols.zip(nulls).flatMap { case (c, n) => num(n).map(c -> _) }.toMap,
+              for (l <- num(lo); h <- num(hi)) yield (l, h), exact)
+        }.toMap
+        case _ => Map.empty
+      }
+    }
+  }
+}

@@ -33,9 +33,12 @@ final case class RollupMeta(
     hllSketches: Map[String, String] = Map.empty,
     /** k of the stored KMV sketches */
     kmvK: Int = org.apache.spark.sql.graft.KmvSketch.DefaultK,
-    /** EXACT distinct count of each sketched column, measured at rollup
-      * build — the proof obligation for serving `count(DISTINCT)` from the
-      * sketch losslessly (approximate NDV stats are not proof)
+    /** Distinct count of each sketched column: EXACT at rollup build, a
+      * PROVEN UPPER BOUND after a refresh (the previous value plus the
+      * dirty slice's exact distinct count, see [[CubeRefresh]]). Either is
+      * the proof obligation for serving `count(DISTINCT)` or TopN from the
+      * sketch losslessly — a bound within the sketch's capacity proves the
+      * true count is too (approximate NDV stats are not proof)
       */
     kmvExactNdv: Map[String, Long] = Map.empty,
     /** derived-metric key (see `RollupCube.derivedDefs`) -> stored sum

@@ -8,23 +8,27 @@ import org.apache.spark.sql.functions._
   * ONLY the time buckets whose data changed, never the whole cube.
   *
   * This is the batch counterpart of the streaming upkeep
-  * ([[graft.streaming.EventPipeline.rollupIngest]]) and the piece that makes
-  * the cube operable at 100 TB: a daily load touches one or two month
-  * buckets, so refresh cost is proportional to the NEW data (plus metadata
-  * passes), not to history. The reference delegates this entirely to
-  * Druid's external indexing service (segments are rebuilt per interval by
-  * `HadoopDruidIndexer`, `docs/benchmark/BenchMarkDetails.org:676-699`);
-  * here it is a first-class engine operation.
+  * ([[graft.streaming.EventPipeline.rollupIngest]]). A daily load touches
+  * one or two month buckets, and the refresh reads the appended files, the
+  * fact table once (the flattening join of the dirty buckets) and the
+  * dirty slice — never the whole cube. The reference delegates this
+  * entirely to Druid's external indexing service (segments are rebuilt per
+  * interval by `HadoopDruidIndexer`,
+  * `docs/benchmark/BenchMarkDetails.org:676-699`); here it is a
+  * first-class engine operation, with maintenance kept apart from serving
+  * as in POLARIS (VLDB 2020): work follows the delta, readers see whole
+  * published generations.
   *
   * Mechanics:
-  *   1. *Dirty-bucket detection*: per-bucket row counts of the fact table
-  *      (one column scanned, no joins — the bucket is a function of the
-  *      fact's time column) vs. per-bucket counts of the cube (partition
-  *      column only — served from parquet metadata). A bucket is dirty if
-  *      the counts differ: brand-new months AND late-arriving rows in old
-  *      months both qualify. Callers that already know the changed buckets
-  *      (e.g. a partitioned upstream feed) pass them explicitly and skip
-  *      the detection scan.
+  *   1. *Dirty-bucket detection* ([[FactListing]]): each generation records
+  *      the fact files its flattening read. When every recorded file is still
+  *      there unchanged, only the files not in the listing are scanned, and
+  *      the buckets of their rows are the dirty set — new months and
+  *      late-arriving rows in old months alike. When a recorded file was
+  *      rewritten or removed, or no listing was recorded, per-bucket row
+  *      counts of the whole fact table are compared with the cube's instead.
+  *      Callers that already know the changed buckets pass them explicitly
+  *      and skip detection.
   *   2. *Cube rewrite*: the flattening join runs with the bucket predicate
   *      pushed to the fact scan, and the result dynamic-partition-overwrites
   *      just the dirty `g_tbucket=` directories.
@@ -33,16 +37,37 @@ import org.apache.spark.sql.functions._
   *      and dynamic-overwritten. Node schemas are reconstructed from
   *      [[RollupMeta]] — counts, DECIMAL sums, derived sums, min/max, HLL +
   *      KMV sketches — and column-aligned to the existing files.
-  *   4. *Metadata*: stats sidecars (NDVs, time interval, day-quantization)
-  *      and the exact-NDV proof for lossless sketch serving are recomputed,
-  *      the registration updated and the descriptor sidecar re-saved.
+  *   4. *Metadata*: total rows, rows written, NULL counts of the sketched
+  *      columns and of the time column, and (for UTC micros timestamps) the
+  *      time interval come exactly from the new generation's parquet
+  *      footers. After a listing-based detection everything else comes from
+  *      ONE pass over the dirty slice merged with the previous generation
+  *      ([[CubeStats.merge]]): unioned NDV sketches, interval and lag
+  *      unions, the sub-day OR. The exact-NDV proof value becomes a proven
+  *      upper bound — previous value plus the slice's exact distinct count,
+  *      since the new generation's rows are the carried ones plus the slice
+  *      — and the exact whole-cube count runs only for a column whose bound
+  *      crosses a sketch capacity the previous value was within. An upper
+  *      bound within capacity proves the sketch lossless as well as the
+  *      exact value does. After a fallback detection or an explicit dirty
+  *      set the stats and proofs are measured over the whole new
+  *      generation, as at build.
   */
 object CubeRefresh {
 
   final case class Result(
       dirtyBuckets: Seq[Int],
       cubeRowsWritten: Long,
-      refreshed: RegisteredCube)
+      refreshed: RegisteredCube,
+      /** wall time per phase in ms, in order: `detect`, `cube_slice`,
+        * `node:<root dir name>` per lattice node, `stats`, `publish` —
+        * contiguous, so they sum to the refresh's wall time under the lock
+        */
+      phasesMs: Seq[(String, Double)] = Nil,
+      /** dirty buckets came from the appended fact files alone, and stats
+        * and proofs were merged from the dirty slice
+        */
+      incremental: Boolean = false)
 
   /** Buckets present in the materialized cube, with row counts — scans only
     * the partition column (parquet row counts come from footer metadata).
@@ -61,27 +86,40 @@ object CubeRefresh {
     * are all many-to-one from the fact, so flat row count per bucket equals
     * fact row count per bucket.
     */
-  private def factBucketCounts(spark: SparkSession, cube: RegisteredCube): Option[Map[Int, Long]] = {
-    val info = cube.info
-    val factRole = info.starSchema.factTable
-    for {
-      physical <- info.roleOfTable.collectFirst {
-        case (table, roles) if roles.contains(factRole) => table }
-      path <- cube.tablePaths.get(physical)
-      srcTimeCol <- info.columnMapping.collectFirst {
-        case ((role, src), dst) if role == factRole && dst == info.timeColumn => src }
-    } yield graft.Graft.withoutRewrites(spark) {
+  private def factBucketCounts(spark: SparkSession, factPath: String,
+                               srcTimeCol: String): Map[Int, Long] =
+    graft.Graft.withoutRewrites(spark) {
       // the raw fact table, NOT the cube: a bare-fact aggregate would
       // otherwise collapse onto the very cube being refreshed and compare
       // the stale data against itself
-      spark.read.parquet(path)
+      spark.read.parquet(factPath)
         .groupBy(TpchCube.bucketExpr(srcTimeCol).as("g_b"))
         .count()
         .collect()
         .map(r => r.getInt(0) -> r.getLong(1))
         .toMap
     }
-  }
+
+  /** Buckets of the rows in the appended fact files. */
+  private def appendedBuckets(spark: SparkSession, factPath: String, srcTimeCol: String,
+                              files: Seq[FactListing.Entry]): Seq[Int] =
+    if (files.isEmpty) Nil
+    else graft.Graft.withoutRewrites(spark) {
+      val isDir = new java.io.File(factPath).isDirectory
+      val reader = if (isDir) spark.read.option("basePath", factPath) else spark.read
+      // distinct per partition, merged on the driver: one stage, no shuffle
+      val perPartition = reader
+        .parquet(files.map(e => if (isDir) s"$factPath/${e.rel}" else factPath): _*)
+        .select(TpchCube.bucketExpr(srcTimeCol).as("g_b")).rdd
+        .mapPartitions(rows => Iterator(rows.map(r =>
+          if (r.isNullAt(0)) None else Some(r.getInt(0))).toSet))
+        .collect()
+      val buckets = perPartition.flatten.toSet
+      if (buckets.contains(None)) throw new IllegalStateException(
+        s"appended fact rows under $factPath have a NULL time; a refresh " +
+          "rewrites time buckets only — rebuild the cube to include them")
+      buckets.flatten.toSeq.sorted
+    }
 
   /** Refresh `cube` from the current state of its sources. `flatFn` must
     * produce the SAME flattening the cube was materialized with (its column
@@ -100,6 +138,9 @@ object CubeRefresh {
     * maintenance unit) holds the cube root's cross-JVM maintenance lock
     * ([[graft.operators.Artifacts.maintenanceLocked]]), so a foreign
     * driver's refresh serializes behind this one.
+    *
+    * Each refresh is also recorded in `graft_query_history` as a
+    * `build:refresh:<cube>` row whose detail lists the phase times.
     */
   def refresh(spark: SparkSession, cube: RegisteredCube,
               flatFn: => DataFrame,
@@ -114,7 +155,13 @@ object CubeRefresh {
         cubePath = CubeGenerations.currentDir(cube.cubePath),
         rollups = cube.rollups.map(ru =>
           ru.copy(path = CubeGenerations.currentDir(ru.path))))
-      refreshImpl(spark, resolved, flatFn, explicitDirty)
+      val r = refreshImpl(spark, resolved, flatFn, explicitDirty)
+      graft.plans.QueryHistory.recordBuild(s"refresh:${cube.info.name}",
+        math.round(r.phasesMs.map(_._2).sum),
+        (r.phasesMs.map { case (p, ms) => f"$p=$ms%.0fms" } ++
+          Seq(s"dirty=${r.dirtyBuckets.size}", s"rows=${r.cubeRowsWritten}",
+            s"path=${if (r.incremental) "incremental" else "full"}")).mkString(" "))
+      r
     }
 
   private def refreshImpl(spark: SparkSession, cube: RegisteredCube,
@@ -122,17 +169,42 @@ object CubeRefresh {
                           explicitDirty: Option[Seq[Int]]): Result = {
     val info = cube.info
     val bkt = info.timeBucketColumn
+    val phases = Seq.newBuilder[(String, Double)]
+    var mark = System.nanoTime()
+    def endPhase(name: String): Unit = {
+      val now = System.nanoTime()
+      phases += name -> (now - mark) / 1e6
+      mark = now
+    }
 
+    // 1. dirty buckets. The listing is taken BEFORE the flattening join
+    // reads the sources, and its files that join read are recorded with
+    // the new generation — except for an explicit dirty set, which
+    // vouches for nothing else.
+    val listing =
+      if (explicitDirty.isDefined) None
+      else FactListing.listFact(info, cube.tablePaths)
+    val appended = for {
+      recorded <- FactListing.load(cube.cubePath)
+      now <- listing
+      files <- FactListing.appended(recorded, now)
+    } yield files
     val dirty: Seq[Int] = explicitDirty.getOrElse {
-      val inCube = cubeBucketCounts(spark, cube)
-      val inFact = factBucketCounts(spark, cube).getOrElse(
+      val (factPath, srcTimeCol) = FactListing.factSource(info, cube.tablePaths).getOrElse(
         throw new IllegalStateException(
           s"cube ${info.name}: fact table not resolvable from metadata; " +
             "pass explicitDirty"))
-      (inFact.keySet ++ inCube.keySet).toSeq.sorted
-        .filter(b => inFact.getOrElse(b, 0L) != inCube.getOrElse(b, 0L))
+      appended match {
+        case Some(files) => appendedBuckets(spark, factPath, srcTimeCol, files)
+        case None =>
+          val inCube = cubeBucketCounts(spark, cube)
+          val inFact = factBucketCounts(spark, factPath, srcTimeCol)
+          (inFact.keySet ++ inCube.keySet).toSeq.sorted
+            .filter(b => inFact.getOrElse(b, 0L) != inCube.getOrElse(b, 0L))
+      }
     }
-    if (dirty.isEmpty) return Result(Nil, 0L, cube)
+    endPhase("detect")
+    if (dirty.isEmpty) return Result(Nil, 0L, cube, phases.result())
     val dirtyDirs = dirty.map(b => s"$bkt=$b").toSet
 
     // 2. stage the new cube generation: clean buckets carried by hard
@@ -142,11 +214,12 @@ object CubeRefresh {
     val nextCube = CubeGenerations.nextDir(cube.cubePath)
     CubeGenerations.stageCarry(cube.cubePath, nextCube)(name =>
       name.startsWith(bkt + "=") && !dirtyDirs.contains(name))
-    val cubeSchema = spark.read.parquet(cube.cubePath).schema.fieldNames
-    val slice = flatFn
+    val cubeSchema = spark.read.parquet(cube.cubePath).schema
+    val flat = flatFn
+    val slice = flat
       .withColumn(bkt, TpchCube.bucketExpr(info.timeColumn))
       .filter(col(bkt).isin(dirty: _*))
-      .select(cubeSchema.map(col): _*)
+      .select(cubeSchema.fieldNames.map(col): _*)
     // written WITHOUT rewrites: the flattening join must read the raw
     // sources, never collapse onto the stale cube it is replacing.
     // Rewritten buckets keep the cube's DECLARED intra-bucket clustering
@@ -166,15 +239,13 @@ object CubeRefresh {
         .partitionBy(bkt)
         .parquet(nextCube)
     }
-    val written = graft.Graft.withoutRewrites(spark) {
-      spark.read.parquet(nextCube)
-        .filter(col(bkt).isin(dirty: _*)).count()
-    }
+    endPhase("cube_slice")
 
     // 3. stage each rollup node's new generation from the refreshed cube
-    // slice (partition-pruned: only dirty buckets are read)
-    val freshSlice = spark.read.parquet(nextCube)
-      .filter(col(bkt).isin(dirty: _*))
+    // slice (partition-pruned: only dirty buckets are read). The staged
+    // generation has the current one's schema: no inference pass.
+    def nextCubeDf = spark.read.schema(cubeSchema).parquet(nextCube)
+    val freshSlice = nextCubeDf.filter(col(bkt).isin(dirty: _*))
     val stagedNodes: Seq[(RollupMeta, String)] = cube.rollups.map { ru =>
       val nextNode = CubeGenerations.nextDir(ru.path)
       val nodeSchema = spark.read.parquet(ru.path).schema.fieldNames
@@ -195,7 +266,7 @@ object CubeRefresh {
           // months), so a partition-level carry would drop the clean
           // ship-months' contributions — rebuild the whole node (it is
           // |dims|×buckets small) from the full new cube generation
-          clustered(buildNode(spark.read.parquet(nextCube), info, ru)
+          clustered(buildNode(nextCubeDf, info, ru)
             .select(nodeSchema.map(col): _*)
             .repartition(col(ru.timeBucketColumn)), ru.timeBucketColumn)
             .write.mode("overwrite")
@@ -226,43 +297,81 @@ object CubeRefresh {
             .parquet(nextNode)
         }
       }
+      endPhase(s"node:${new java.io.File(CubeGenerations.rootOf(ru.path)).getName}")
       ru -> nextNode
     }
 
-    // 4. metadata: recompute the stats sidecar (time interval, NDVs,
-    // quantization) and the exact-NDV proofs against the STAGED cube;
-    // these are single-agg column passes, far below rebuild cost.
-    // Honest scale note: the exact-NDV proof is BY DEFINITION a pass
-    // over the full (column-pruned) cube — it is what makes the
-    // lossless sketch-serving rewrites sound, and "exact" cannot be
-    // incrementally merged. The refresh-decade probe measures the
-    // whole refresh (this pass included) at exponent ~0 across a 10x
-    // cube (SCALE_PROBE refresh_generations); a deployment where this
-    // pass dominates can skip it and lose only the LOSSLESS serving
-    // proofs (sketch serves then gate off), never correctness.
-    val stats = CubeStats.ensure(spark, info, nextCube)
+    // 4. metadata. Exact figures come from the new generation's footers
+    // (dirty buckets read, clean ones carried: BucketFooters); the rest
+    // from one pass over the dirty slice merged with the previous
+    // generation (incremental), or from whole-generation passes (full).
+    // All proof measurements run WITHOUT rewrites: routing them through
+    // the sketches they vouch for would be circular.
+    // Honest scale note: what still reads the whole of something is the
+    // flattening join of step 2, whose fact scan is not pruned to the
+    // dirty buckets (the bucket is computed from the time column, which
+    // parquet min/max only skips when the fact is laid out by time); the
+    // exact whole-generation distinct count runs only when a bound
+    // crosses a sketch capacity, and the full path after a rewritten or
+    // removed fact file.
     val sketched = cube.rollups
       .flatMap(ru => ru.kmvSketches.keys ++ ru.freqSketches.keys ++
         ru.freqWeighted.flatMap(t => Seq(t._1, t._2))).distinct.sorted
-    // measured WITHOUT rewrites: routing the proof measurement through the
-    // sketches it is meant to vouch for would be circular (a stale
-    // "exact" NDV could bless a now-saturated sketch)
-    val NullPrefix = "__nulls__:"
-    val (exactNdv, nullCounts, totalRows): (Map[String, Long], Map[String, Long], Long) =
-      graft.Graft.withoutRewrites(spark) {
-        val row = spark.read.parquet(nextCube)
-          .select((sketched.map(c => countDistinct(col(c)).as(c))
-            ++ sketched.map(c => count(when(col(c).isNull, 1)).as(NullPrefix + c))
-            :+ count(lit(1)).as("__total_rows__")): _*).head()
-        (sketched.zipWithIndex.map { case (c, i) => c -> row.getLong(i) }.toMap,
-          sketched.zipWithIndex.map { case (c, i) =>
-            c -> row.getLong(sketched.size + i) }.toMap,
-          row.getLong(2 * sketched.size))
+    val footers = BucketFooters.ensure(spark, nextCube, bkt, info.timeColumn,
+      carriedFrom = Some(cube.cubePath), reread = dirtyDirs)
+    val written = dirtyDirs.toSeq.map(footers.rowsByBucket.getOrElse(_, 0L)).sum
+    val totalRows = footers.rowsByBucket.values.sum
+    val footerNulls = footers.nulls.filter { case (c, _) => sketched.contains(c) }
+    val missingNulls = sketched.filterNot(footerNulls.contains)
+    // the previous generation's proof values, from ITS descriptor: the
+    // caller's registration may predate a foreign refresh
+    val prevNdv: Map[String, Long] = CubeMeta.load(cube.cubePath).toSeq
+      .flatMap(_.rollups.flatMap(_.kmvExactNdv)).groupBy(_._1)
+      .map { case (c, vs) => c -> vs.map(_._2).max }
+    val prevStats = CubeStats.load(info, cube.cubePath)
+    val prevSketches = CubeStats.loadSketches(info, cube.cubePath)
+    val incremental = appended.isDefined && prevStats.isDefined && prevSketches.isDefined
+    val (stats, exactNdv, nullCounts) = graft.Graft.withoutRewrites(spark) {
+      if (incremental) {
+        // one pass: the slice's stats, sketches and exact distinct counts.
+        // collect_set, not countDistinct: a distinct aggregate beside the
+        // others makes Spark expand every row once per distinct column
+        // (measured 3-4x slower, and slower than two separate jobs); the
+        // sets hold the dirty slice's distinct values only, and a set
+        // can only over-count (-0.0 vs 0.0), which keeps the bound sound
+        val (sliceStats, sliceSketches, sliceCounts) = CubeStats.measure(info, freshSlice,
+          sketched.map(c => size(collect_set(col(c))).cast("long")))
+        val sliceNdv = sketched.zip(sliceCounts).toMap
+        val (merged, sketches) = CubeStats.merge(prevStats.get, prevSketches.get,
+          sliceStats, sliceSketches)
+        val stats = merged ++
+          footers.nulls.get(info.timeColumn).map("__time_nulls" -> _) ++
+          footers.timeRange.toSeq.flatMap { case (lo, hi) =>
+            Seq("__time_min_us" -> lo, "__time_max_us" -> hi) }
+        CubeStats.save(nextCube, stats, sketches)
+        // a sketch is lossless while the column's NDV fits its capacity
+        val capacities: Map[String, Seq[Int]] = cube.rollups
+          .flatMap(ru => ru.kmvSketches.keys.map(_ -> ru.kmvK) ++
+            ru.freqSketches.keys.map(_ -> ru.freqK) ++
+            ru.freqWeighted.map(_._1 -> ru.freqK))
+          .groupBy(_._1).map { case (c, ks) => c -> ks.map(_._2) }
+        val bound = sketched.flatMap(c =>
+          prevNdv.get(c).map(p => c -> (p + sliceNdv(c)))).toMap
+        val remeasure = sketched.filter(c => !bound.contains(c) ||
+          capacities.getOrElse(c, Nil).exists(k => prevNdv(c) <= k && bound(c) > k))
+        val (exact, nulls) = exactCounts(nextCubeDf, remeasure, missingNulls)
+        (stats, bound ++ exact, footerNulls ++ nulls)
+      } else {
+        val stats = CubeStats.ensure(spark, info, nextCube)
+        val (exact, nulls) = exactCounts(nextCubeDf, sketched, missingNulls)
+        (stats, exact, footerNulls ++ nulls)
       }
+    }
     // re-measured proofs supersede the build-time sidecar: rewrite it
     // wherever a node keeps one, or a later ensure() would re-register the
     // stale pre-refresh values (and a stale totalRows could vouch for a
     // sketch that now saturates)
+    val NullPrefix = "__nulls__:"
     stagedNodes.foreach { case (_, nextNode) =>
       val sidecar = new java.io.File(nextNode, "_measured_ndv.json")
       if (sidecar.exists()) {
@@ -275,6 +384,8 @@ object CubeRefresh {
         ()
       }
     }
+    // only the files the flattening read count as absorbed
+    listing.foreach(l => FactListing.save(nextCube, FactListing.readBy(l, flat)))
     val refreshed = cube.copy(
       info = CubeStats.withStats(info, stats),
       cubePath = nextCube,
@@ -283,6 +394,8 @@ object CubeRefresh {
         totalRows = Some(totalRows),
         kmvExactNdv = ru.kmvExactNdv ++ exactNdv,
         exactNullCount = ru.exactNullCount ++ nullCounts)})
+    endPhase("stats")
+
     // 5. publish: descriptor INTO the new generation first (a foreign
     // session resolving the new pointer must find a descriptor naming
     // the new node paths — one internally-consistent set), then the node
@@ -307,17 +420,32 @@ object CubeRefresh {
     stagedNodes.foreach { case (_, nextNode) =>
       CubeGenerations.gc(spark, nextNode)
     }
-    Result(dirty, written, refreshed)
+    endPhase("publish")
+    Result(dirty, written, refreshed, phases.result(), incremental)
   }
+
+  /** Exact distinct counts of `ndvCols` and NULL counts of `nullCols` in
+    * `df`, in one pass (none when both are empty).
+    */
+  private def exactCounts(df: => DataFrame, ndvCols: Seq[String], nullCols: Seq[String])
+      : (Map[String, Long], Map[String, Long]) =
+    if (ndvCols.isEmpty && nullCols.isEmpty) (Map.empty, Map.empty)
+    else {
+      val row = df.select((ndvCols.map(c => countDistinct(col(c)))
+        ++ nullCols.map(c => count(when(col(c).isNull, 1)))): _*).head()
+      (ndvCols.zipWithIndex.map { case (c, i) => c -> row.getLong(i) }.toMap,
+        nullCols.zipWithIndex.map { case (c, i) =>
+          c -> row.getLong(ndvCols.size + i) }.toMap)
+    }
+
+  /** A node bucketed by a different time column than the cube's own. */
+  private[cube] def isSecondary(info: CubeInfo, ru: RollupMeta): Boolean =
+    ru.timeColumn.exists(!_.equalsIgnoreCase(info.timeColumn))
 
   /** Aggregate one rollup lattice node from flat-cube rows, reconstructed
     * entirely from its [[RollupMeta]] — the same shapes the original build
     * used (DECIMAL(28,6) sums, derived-metric sums, HLL/KMV sketches).
     */
-  /** A node bucketed by a different time column than the cube's own. */
-  private[cube] def isSecondary(info: CubeInfo, ru: RollupMeta): Boolean =
-    ru.timeColumn.exists(!_.equalsIgnoreCase(info.timeColumn))
-
   private[cube] def buildNode(flat: DataFrame, info: CubeInfo,
                               ru: RollupMeta): DataFrame = {
     val timeSrc = ru.timeColumn.getOrElse(info.timeColumn)

@@ -180,7 +180,12 @@ object TpchCube {
     // the resolved generation, never the mutable root identity.
     val path = CubeGenerations.currentDir(cubePath(sfDir))
     val marker = new java.io.File(path, "_SUCCESS")
+    val tablePaths = roleOfTable.keys.map { t =>
+      t -> CubeCatalog.normalizePath(Tables.path(sfDir, t))
+    }.toMap
     if (!marker.exists()) {
+      // listed BEFORE the sources are read, for CubeRefresh's detection
+      val listing = FactListing.listFact(info, tablePaths)
       // rows within each time bucket are CLUSTERED by the declared
       // clusterDims (CubeInfo) — the layout-level stand-in for Druid's
       // per-dimension inverted indexes: parquet row-group/page min-max
@@ -190,15 +195,15 @@ object TpchCube {
       // s_nation = Y` slice reads ~1/|segment| of them instead of all.
       // The sort leads with the partition column so the dynamic-partition
       // writer reuses it instead of re-sorting (see CubeRefresh).
-      Tables.flat(spark, sfDir)
+      val flat = Tables.flat(spark, sfDir)
+      flat
         .withColumn("g_tbucket", bucketExpr("l_shipdate"))
         .repartition(col("g_tbucket"))
         .sortWithinPartitions(("g_tbucket" +: info.clusterDims).map(col): _*)
         .write.mode("overwrite").partitionBy("g_tbucket").parquet(path)
+      listing.foreach(l => FactListing.save(path, FactListing.readBy(l, flat)))
+      BucketFooters.ensure(spark, path, "g_tbucket", info.timeColumn)
     }
-    val tablePaths = roleOfTable.keys.map { t =>
-      t -> CubeCatalog.normalizePath(Tables.path(sfDir, t))
-    }.toMap
     val sf = new java.io.File(sfDir).getName
     val stats = CubeStats.ensure(spark, info, path)
     val withStats = CubeStats.withStats(info.copy(name = s"${CubeName}_$sf"), stats)

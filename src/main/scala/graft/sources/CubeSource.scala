@@ -34,17 +34,27 @@ object CubeSource {
     */
   def readTable(spark: SparkSession, path: String,
                 schema: Option[StructType] = None): DataFrame = {
-    val lower = path.toLowerCase(java.util.Locale.ROOT)
     def base = {
       val r = spark.read
       schema.map(r.schema).getOrElse(r)
     }
-    if (lower.endsWith(".csv") || lower.endsWith(".csv.d"))
-      (if (schema.isEmpty) base.option("inferSchema", "true") else base)
-        .option("header", "true").csv(path)
-    else if (lower.endsWith(".json") || lower.endsWith(".jsonl")) base.json(path)
-    else if (lower.endsWith(".orc") || lower.endsWith(".orc.d")) base.orc(path)
-    else base.parquet(path)
+    formatOf(path) match {
+      case "csv" =>
+        (if (schema.isEmpty) base.option("inferSchema", "true") else base)
+          .option("header", "true").csv(path)
+      case "json" => base.json(path)
+      case "orc"  => base.orc(path)
+      case _      => base.parquet(path)
+    }
+  }
+
+  /** The format [[readTable]] reads `path` as. */
+  def formatOf(path: String): String = {
+    val lower = path.toLowerCase(java.util.Locale.ROOT)
+    if (lower.endsWith(".csv") || lower.endsWith(".csv.d")) "csv"
+    else if (lower.endsWith(".json") || lower.endsWith(".jsonl")) "json"
+    else if (lower.endsWith(".orc") || lower.endsWith(".orc.d")) "orc"
+    else "parquet"
   }
 
   /** Denormalize the star schema into the flat fact DataFrame, columns
@@ -134,7 +144,10 @@ object CubeSource {
     // previous generation at the bare root
     val destPath = graft.cube.CubeGenerations.currentDir(destPath0)
     if (!new java.io.File(destPath, "_SUCCESS").exists()) {
-      val bucketed = flatten(spark, info, tablePaths, schemas)
+      // listed BEFORE the sources are read, for CubeRefresh's detection
+      val listing = FactListing.listFact(info, tablePaths)
+      val flat = flatten(spark, info, tablePaths, schemas)
+      val bucketed = flat
         .withColumn(info.timeBucketColumn,
           graft.cube.TpchCube.bucketExpr(info.timeColumn))
         .repartition(col(info.timeBucketColumn))
@@ -146,6 +159,8 @@ object CubeSource {
           (info.timeBucketColumn +: info.clusterDims).map(col): _*)
       clustered.write.mode("overwrite")
         .partitionBy(info.timeBucketColumn).parquet(destPath)
+      listing.foreach(l => FactListing.save(destPath, FactListing.readBy(l, flat)))
+      BucketFooters.ensure(spark, destPath, info.timeBucketColumn, info.timeColumn)
     }
     val stats = CubeStats.ensure(spark, info, destPath)
     val cube = RegisteredCube(CubeStats.withStats(info, stats), destPath,

@@ -1,12 +1,12 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
+import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, IntegerType, LongType}
 
 /** Primitive-buffer replacements for `collect_list`/`collect_set` in the
   * inverted-index dedup reduce stages.
@@ -134,14 +134,18 @@ object PrimitiveCollects {
   * downstream per-session aggregation (min/max/count/sum are all
   * membership functions, and membership is identical). Null ts or value
   * rows are skipped (the window form's lag/sum skip nulls differently —
-  * call sites have non-null events). Output:
+  * call sites have non-null events). Inputs are implicitly cast to
+  * (BIGINT, DOUBLE), so integer timestamps and float or decimal values
+  * are accepted. Output:
   * `array<struct<sess: int, ts_ms: long, value: double>>`.
   */
 case class SessionSpansExpr(left: Expression, right: Expression, gapMs: Long,
                             mutableAggBufferOffset: Int = 0,
                             inputAggBufferOffset: Int = 0)
     extends TypedImperativeAggregate[PrimitiveCollects.TsVals]
-    with BinaryLike[Expression] {
+    with BinaryLike[Expression] with ImplicitCastInputTypes {
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(LongType, DoubleType)
 
   override def dataType: DataType = ArrayType(
     org.apache.spark.sql.types.StructType(Seq(

@@ -160,6 +160,24 @@ class PrimitiveCollectsSpec extends AnyFunSuite {
     assert(got == want)
   }
 
+  test("sessionSpans casts integer times and float or decimal values") {
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    import classic.implicits._
+    val df = Seq((1L, 0L, 1.5), (1L, 50L, 2.25), (1L, 500L, 3.0), (2L, 10L, 4.5))
+      .toDF("user_id", "ts_ms", "value")
+    def spans(ts: org.apache.spark.sql.Column, v: org.apache.spark.sql.Column) =
+      df.groupBy("user_id")
+        .agg(PrimitiveCollects.sessionSpans(ts, v, 100L).as("s"))
+        .select(col("user_id"), explode(col("s")).as("x"))
+        .select("user_id", "x.sess", "x.ts_ms", "x.value").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).sorted.toSeq
+    val want = spans(col("ts_ms"), col("value"))
+    assert(want.map(_._2) == Seq(1, 1, 2, 1))
+    assert(spans(col("ts_ms"), col("value").cast("float")) == want)
+    assert(spans(col("ts_ms"), col("value").cast("decimal(10,2)")) == want)
+    assert(spans(col("ts_ms").cast("int"), col("value")) == want)
+  }
+
   test("keptLines == sorted collect + array_join reassembly") {
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     import classic.implicits._
