@@ -274,21 +274,25 @@ object Bench {
       // plan-derived figure. Timed reps never pay this (flag off there).
       org.apache.spark.sql.graft.ScanBytes.auxBytes.set(0L)
       org.apache.spark.sql.graft.ScanBytes.auxEnabled = true
-      val df = fn(spark, sfDir)
-      val execOk = try { exec(df); true } catch { case _: Throwable => false }
-      org.apache.spark.sql.graft.ScanBytes.auxEnabled = false
+      // building the frame can fail too: that records the sentinel, and the
+      // flag never stays on for the timed reps
+      val df =
+        try { val d = fn(spark, sfDir); exec(d); Some(d) }
+        catch { case _: Throwable => None }
+        finally org.apache.spark.sql.graft.ScanBytes.auxEnabled = false
       org.apache.spark.sql.graft.ListenerBusUtil.waitUntilEmpty(spark)
       // a query that failed mid-scan still accrued SOME recordsRead; that
       // partial figure is indistinguishable from a real deterministic scan
       // when adjudicating cross-round deltas, so record the -1 sentinel
       // instead (ADVICE r12)
-      if (!execOk) (-1L, -1L)
-      else {
-        val bytes =
-          try org.apache.spark.sql.graft.ScanBytes.of(df) +
-            org.apache.spark.sql.graft.ScanBytes.auxBytes.get()
-          catch { case _: Throwable => -1L }
-        (ioBytes.get(), bytes)
+      df match {
+        case None => (-1L, -1L)
+        case Some(d) =>
+          val bytes =
+            try org.apache.spark.sql.graft.ScanBytes.of(d) +
+              org.apache.spark.sql.graft.ScanBytes.auxBytes.get()
+            catch { case _: Throwable => -1L }
+          (ioBytes.get(), bytes)
       }
     }
     // FULL-SUITE per-query scan metrics (one untimed measurement pass):

@@ -7,9 +7,11 @@ import org.apache.spark.sql.functions._
   * tokenization, quality scoring, language identification, and document
   * fingerprinting.
   *
-  * All of these are composed from `org.apache.spark.sql.functions` built-ins
-  * (including the higher-order array functions), so they evaluate inside the
-  * JVM with no UDF/serialization cost, distribute trivially, and keep the
+  * These are composed from `org.apache.spark.sql.functions` built-ins
+  * (including the higher-order array functions) or, on the hot paths, are
+  * native Catalyst expressions
+  * ([[org.apache.spark.sql.graft.NativeTextExprs]]), so they evaluate inside
+  * the JVM with no UDF/serialization cost, distribute trivially, and keep the
   * scan's predicate pushdown and column pruning intact. The reference engine
   * has no text layer (its scalar surface is `jscodegen/JSCodeGenerator.scala`);
   * this module is the beyond-parity training-data surface layered on the same
@@ -27,17 +29,18 @@ object TextFunctions {
   def let1(value: Column)(body: Column => Column): Column =
     element_at(transform(array(value), body), 1)
 
-  /** Whitespace tokens of a document: the non-empty `\s+`-split pieces of
-    * the RAW text (empty / whitespace-only → empty array; null → null).
-    * The filter — not a `trim` — is load-bearing: SQL `trim` strips only
-    * spaces, so tab- or newline-edged text would otherwise produce phantom
-    * empty tokens (found by NullRobustnessSpec on a `"\t"` document); the
-    * oracle restatement is `list_filter(string_split_regex(text, '\s+'),
-    * x -> x <> '')` — the same semantics on any input, not just on text
-    * whose edges happen to be spaces.
+  /** Whitespace tokens of a document: the maximal runs of its UTF-8 bytes
+    * that hold none of space, `\t`, `\n`, `\x0B`, `\f`, `\r` (empty or
+    * whitespace-only → empty array; null → null), tokenized in one native
+    * pass ([[org.apache.spark.sql.graft.NativeTextExprs.TokensExpr]]). On
+    * every input this equals `array_remove(split(text, "\\s+"), "")`,
+    * malformed UTF-8 included (decoded to U+FFFD first, as `split` does),
+    * and the oracle restatement `list_filter(string_split_regex(text,
+    * '\s+'), x -> x <> '')`. Dropping empty pieces, not a `trim`, is what
+    * keeps tab- or newline-edged text from producing phantom empty tokens.
     */
   def tokens(text: Column): Column =
-    array_remove(split(text, "\\s+"), "")
+    org.apache.spark.sql.graft.NativeTextExprs.tokens(text)
 
   /** Whitespace token count. */
   def tokenCount(text: Column): Column = size(tokens(text))
@@ -266,28 +269,17 @@ object TextFunctions {
         (n - keep).cast("int")), substring(c, -keep, keep)))
   }
 
-  /** Word k-shingles: overlapping k-grams of the token sequence, joined by a
-    * single space. Documents shorter than k tokens yield their whole token
-    * sequence as one shingle.
-    */
-  def shingles(text: Column, k: Int): Column = let1(tokens(text)) { t =>
-    val n = size(t)
-    when(n === 0, array().cast("array<string>"))
-      .otherwise(when(n <= k, array(concat_ws(" ", t)))
-        .otherwise(transform(
-          sequence(lit(1), n - lit(k - 1)),
-          i => concat_ws(" ", slice(t, i, lit(k))))))
-  }
-
   /** MinHash signature over word `k`-shingles: component `i` is
-    * `min over shingles of xxhash64(shingle, i)`. Empty docs get
-    * `Long.MaxValue` components (never collide with real signatures).
-    * Evaluated by the single-pass native expression
-    * ([[org.apache.spark.sql.graft.NativeTextExprs.MinHashSignatureExpr]]): each shingle is hashed
-    * once, components derive from the base hash.
+    * `min over shingles of xxhash64(shingle, i)`, a shingle being `k`
+    * consecutive [[tokens]] joined by single spaces (a document of at most
+    * `k` tokens is one shingle). Empty docs get `Long.MaxValue` components
+    * (never collide with real signatures). Evaluated from the text in one
+    * native pass
+    * ([[org.apache.spark.sql.graft.NativeTextExprs.MinHashExpr]]): each
+    * shingle is hashed once, components derive from the base hash.
     */
   def minhashSignature(text: Column, k: Int, numHashes: Int): Column =
-    org.apache.spark.sql.graft.NativeTextExprs.minhashSignature(shingles(text, k), numHashes)
+    org.apache.spark.sql.graft.NativeTextExprs.minhashSignature(text, k, numHashes)
 
   /** Estimated Jaccard similarity from two equal-length MinHash signatures:
     * the fraction of agreeing components.

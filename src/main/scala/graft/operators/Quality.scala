@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextFunctions
+import org.apache.spark.sql.graft.NativeTextExprs
+
 import graft.functions.TextFunctions.let1
 
 /** Document-quality filter rules in the style of the Gopher heuristics
@@ -14,17 +15,18 @@ import graft.functions.TextFunctions.let1
   * pre-training corpus filters (C4/Gopher/RefinedWeb family).
   *
   * Two kinds of rules live here:
-  *   - **Scalar rules** ([[meanWordLength]], [[alphaWordRatio]],
-  *     [[symbolWordRatio]], [[duplicateLineCharFraction]],
-  *     [[bulletOrEllipsisLineFraction]]) are pure column algebra — one
-  *     projection inside whole-stage codegen, no shuffle, scan pruning
-  *     intact. Line rules are quadratic in the *line* count of a document
+  *   - **Scalar rules** are per-row projections: no shuffle, scan pruning
+  *     intact. The word rules ([[meanWordLength]], [[alphaWordRatio]],
+  *     [[symbolWordRatio]]) are native single passes over the text's bytes
+  *     ([[org.apache.spark.sql.graft.NativeTextExprs]]); the line rules
+  *     ([[duplicateLineCharFraction]], [[bulletOrEllipsisLineFraction]])
+  *     are column algebra, quadratic in the *line* count of a document
   *     (fine: web documents have tens of lines, and the work is per-row,
   *     embarrassingly parallel).
-  *   - **N-gram repetition** ([[ngramRepetition]]) is per-document too,
-  *     so it is ALSO pure column algebra: sorted-gram-array folds replace
-  *     the explode/count/window formulation — zero shuffles, one scan,
-  *     per-row work bounded by the document length.
+  *   - **N-gram repetition** ([[ngramRepetition]]) is per-document too: one
+  *     native pass groups the grams of a document instead of the
+  *     explode/count/window formulation — zero shuffles, one scan, per-row
+  *     work bounded by the document length.
   *
   * The reference engine has no text layer (scalar surface:
   * `jscodegen/JSCodeGenerator.scala`); this is beyond-parity training-data
@@ -33,32 +35,18 @@ import graft.functions.TextFunctions.let1
 object Quality {
 
   /** Mean token length in characters (0.0 for empty documents). */
-  def meanWordLength(text: Column): Column = let1(TextFunctions.tokens(text)) { t =>
-    when(size(t) === 0, lit(0.0))
-      .otherwise(aggregate(t, lit(0L), (a, w) => a + length(w)).cast("double")
-        / size(t).cast("double"))
-  }
+  def meanWordLength(text: Column): Column = NativeTextExprs.meanWordLength(text)
 
   /** Fraction of tokens containing at least one ASCII letter (Gopher keeps
     * documents where >= 80% of words have an alphabetic character).
     */
-  def alphaWordRatio(text: Column): Column = let1(TextFunctions.tokens(text)) { t =>
-    when(size(t) === 0, lit(0.0))
-      .otherwise(size(filter(t, w => w.rlike("[A-Za-z]"))).cast("double")
-        / size(t).cast("double"))
-  }
+  def alphaWordRatio(text: Column): Column = NativeTextExprs.alphaWordRatio(text)
 
   /** Symbol-to-word ratio: occurrences of the Gopher symbol set
     * (`#`, `...`, `…`) per token. An ASCII ellipsis counts once however
     * long the dot run is.
     */
-  def symbolWordRatio(text: Column): Column = let1(TextFunctions.tokens(text)) { t =>
-    val hashes = size(split(text, "#", -1)) - 1
-    val asciiEll = size(split(text, "\\.{3,}", -1)) - 1
-    val uniEll = size(split(text, "…", -1)) - 1
-    when(size(t) === 0, lit(0.0))
-      .otherwise((hashes + asciiEll + uniEll).cast("double") / size(t).cast("double"))
-  }
+  def symbolWordRatio(text: Column): Column = NativeTextExprs.symbolWordRatio(text)
 
   /** Non-empty lines of a document (trailing whitespace stripped). */
   private def lines(text: Column): Column =
@@ -103,12 +91,11 @@ object Quality {
     * the metric is layout-invariant like the tokenizer.
     *
     * Scale shape: a PURE PROJECTION — the statistics are per-document, so
-    * they are computed per row with array folds (sort the gram array, one
-    * fold for the max run = most frequent gram, one fold collecting the
-    * duplicated grams, one fold summing covered token characters). No
-    * shuffle, no window, no self-join: the corpus cost is one scan, and
-    * the per-row work is O(m log m + m·n·d) for m tokens and d duplicated
-    * grams — bounded by the document, not the corpus. (Degenerate mega-
+    * they are computed per row by one native pass that groups equal grams
+    * in a hash table and sums covered token characters. No shuffle, no
+    * window, no self-join: the corpus cost is one scan, and the per-row
+    * work is O(m·n) for m tokens — bounded by the document, not the
+    * corpus. (Degenerate mega-
     * documents should be length-truncated upstream, the same upstream
     * hygiene the exploded formulation needed against gram-key skew.)
     */
@@ -128,40 +115,9 @@ object Quality {
     */
   def ngramRepetitionCols(text: Column, n: Int): Column = {
     require(n >= 1, s"ngram size must be >= 1, got $n")
-    // one native single-pass expression (NativeTextExprs.NgramRepetitionExpr)
-    // instead of the former five-fold higher-order column algebra: HOFs run
-    // interpreted (no whole-stage codegen), and per-row expression-tree
-    // walking dominated the gopher gate (measured ~0.6 s of the 1.05 s
-    // sf0.1 query). Bit-identical statistics — same gram construction,
-    // binary sort order, tie-breaking and double arithmetic.
-    org.apache.spark.sql.graft.NativeTextExprs
-      .ngramRepetition(TextFunctions.tokens(text), n)
+    NativeTextExprs.ngramRepetition(text, n)
   }
 
-  /** Hashed-bigram linear quality scorer — fastText-style classifier
-    * INFERENCE as pure column algebra (Joulin et al. 2016, "Bag of Tricks
-    * for Efficient Text Classification"): each token-bigram hashes into one
-    * of `numBuckets` feature buckets, the document margin is the mean
-    * bucket weight, and the score squashes the margin into (0, 1). This is
-    * the model-based quality-filter stage of a training pipeline (CCNet /
-    * LLaMA-style "looks like Wikipedia" scoring) with the same contract as
-    * [[graft.operators.Multimodal]]'s codec: the WEIGHTS are a documented
-    * deterministic stand-in (no trained artifact ships in this sandbox),
-    * the distributed inference plumbing is real — hashing, bucket lookup,
-    * accumulation and squashing are one codegen'd projection, zero
-    * shuffles, scan pruning intact, per-row cost linear in document length.
-    * Swap [[pseudoWeight]] for a `typedLit` weight-vector lookup to serve a
-    * real model.
-    *
-    * Every step is integer arithmetic below 2^53 followed by
-    * exactly-rounded double ops (one division, the rational squash
-    * `m/(1+|m|)` — never libm), so any engine reproduces the score
-    * bit-for-bit: the classifier has a cross-engine oracle, which a
-    * `sigmoid`/`exp` formulation would not.
-    *
-    * Documents with fewer than 2 tokens have no bigram features and score
-    * a neutral 0.5.
-    */
   /** Empty-safe adjacent-bigram structs of a token array (`slice`+`zip`
     * instead of `sequence`, whose descending ranges explode on short docs).
     */
@@ -224,31 +180,40 @@ object Quality {
           count(lit(1)).cast("double")).as("lm_score"))
   }
 
+  /** Hashed-bigram linear quality scorer — fastText-style classifier
+    * INFERENCE as one projection (Joulin et al. 2016, "Bag of Tricks
+    * for Efficient Text Classification"): each token-bigram hashes into one
+    * of `numBuckets` feature buckets, the document margin is the mean
+    * bucket weight, and the score squashes the margin into (0, 1). This is
+    * the model-based quality-filter stage of a training pipeline (CCNet /
+    * LLaMA-style "looks like Wikipedia" scoring) with the same contract as
+    * [[graft.operators.Multimodal]]'s codec: the WEIGHTS are a documented
+    * deterministic stand-in (no trained artifact ships in this sandbox),
+    * the distributed inference plumbing is real — hashing, bucket lookup,
+    * accumulation and squashing are one native single-pass projection
+    * ([[org.apache.spark.sql.graft.NativeTextExprs.LinearScoreExpr]]), zero
+    * shuffles, scan pruning intact, per-row cost linear in document length.
+    * Replace its stand-in weight `(bucket + 1) * A mod M` (A = 2654435761
+    * mod M, Knuth's multiplicative constant) with a weight-vector lookup to
+    * serve a real model.
+    *
+    * Definition, per document: each token hashes to the base-31 polynomial
+    * of its code points mod M = 2^31 - 1; bigram `(a, b)` falls in bucket
+    * `(a * 131 + b) % M % numBuckets`; the margin is the mean bucket weight
+    * divided by M, times 2, minus 1, and the score is
+    * `0.5 + 0.5 * margin / (1 + |margin|)`.
+    *
+    * Every step is integer arithmetic below 2^53 followed by
+    * exactly-rounded double ops (one division, the rational squash
+    * `m/(1+|m|)` — never libm), so any engine reproduces the score
+    * bit-for-bit: the classifier has a cross-engine oracle, which a
+    * `sigmoid`/`exp` formulation would not.
+    *
+    * Documents with fewer than 2 tokens have no bigram features and score
+    * a neutral 0.5.
+    */
   def linearScore(text: Column, numBuckets: Int = 4096): Column = {
     require(numBuckets >= 2, s"need at least 2 feature buckets, got $numBuckets")
-    val M = 2147483647L // 2^31 - 1 (token-hash modulus, poly family)
-    val A = 2654435761L % M // Knuth multiplicative constant, reduced
-    // portable per-token polynomial hash (the polyFingerprint family)
-    val th = transform(TextFunctions.tokens(text), t =>
-      aggregate(split(t, ""), lit(0L), (h, c) => (h * 31L + ascii(c)) % M))
-    let1(th) { hs =>
-      val n = size(hs)
-      // bigram i -> feature bucket in [0, numBuckets)
-      val buckets = transform(sequence(lit(1), n - 1), i =>
-        (element_at(hs, i) * 131L + element_at(hs, i + 1)) % M % numBuckets)
-      // deterministic stand-in weight, integer-valued in [0, M): real
-      // deployments replace this with element_at(typedLit(weights), b+1)
-      def pseudoWeight(b: Column): Column = (b + 1L) * A % M
-      when(n < 2, lit(0.5)).otherwise(let1(buckets) { bs =>
-        // integer accumulation: exact below 2^53 for docs < ~4M tokens
-        val sumW = aggregate(bs, lit(0L), (a, b) => a + pseudoWeight(b))
-        // margin in (-1, 1): mean weight rescaled off its M/2 midpoint
-        val margin =
-          (sumW.cast("double") / size(bs).cast("double")) / lit(M.toDouble) *
-            lit(2.0) - lit(1.0)
-        // rational squash (exactly rounded, unlike exp): (0, 1)
-        lit(0.5) + lit(0.5) * margin / (lit(1.0) + abs(margin))
-      })
-    }
+    NativeTextExprs.linearScore(text, numBuckets)
   }
 }

@@ -1,15 +1,25 @@
 package org.apache.spark.sql.graft
 
+import java.nio.charset.StandardCharsets
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression, XXH64, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ImplicitCastInputTypes, UnaryExpression, XXH64, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the hash-sketch hot path.
+/** Native Catalyst expressions for the text and hash-sketch hot paths.
+  *
+  * The text kernels ([[TokensExpr]], [[MinHashExpr]], the Gopher rules,
+  * [[LinearScoreExpr]], [[NgramRepetitionExpr]]) read a document's UTF-8
+  * bytes once through [[TextTokens]] instead of splitting it with a regex
+  * and folding the pieces in interpreted higher-order functions; each
+  * returns exactly what the column form it replaced returned.
   *
   * The composed higher-order-function versions re-hash every shingle string
   * once per signature component (64×) because each `array_min(transform(…))`
@@ -32,39 +42,356 @@ object NativeTextExprs {
 
   private val Seed = 42L
 
-  /** MinHash signature over a pre-computed shingle array: component `i` is
-    * `min over shingles of xxhash64(shingle, i)`; empty input yields all
-    * `Long.MaxValue` (matching the composed implementation).
+  /** Whitespace tokens of one document, as byte ranges of its UTF-8 text.
+    *
+    * A token is a maximal run of bytes other than space, `\t`, `\n`,
+    * `\x0B`, `\f` and `\r` — Java's default `\s`, which
+    * `split(text, "\\s+")` splits on (NBSP and `\x1C` are not separators).
+    * The six separators are ASCII and no multi-byte UTF-8 sequence contains
+    * an ASCII byte, so on well-formed UTF-8 these runs are exactly the
+    * non-empty split pieces, byte for byte. Malformed input is first decoded
+    * and re-encoded as `split` sees it (each malformed sequence becomes
+    * U+FFFD). Token `i` is `bytes[start(i), end(i))`; `bytes` is never the
+    * input's own buffer, so slices of it may outlive the input row.
     */
-  case class MinHashSignatureExpr(child: Expression, numHashes: Int)
-      extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
+  private[graft] final class TextTokens private (val bytes: Array[Byte],
+      val start: Array[Int], val end: Array[Int], val n: Int) {
 
-    override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def prettyName: String = "minhash_signature"
+    /** Characters (code points) of token `i`: its non-continuation bytes. */
+    def chars(i: Int): Int = {
+      var c = 0
+      var p = start(i)
+      while (p < end(i)) { if ((bytes(p) & 0xC0) != 0x80) c += 1; p += 1 }
+      c
+    }
 
-    override protected def nullSafeEval(input: Any): Any = {
-      val arr = input.asInstanceOf[ArrayData]
-      val mins = Array.fill(numHashes)(Long.MaxValue)
-      var i = 0
-      val n = arr.numElements()
-      while (i < n) {
-        val s = arr.getUTF8String(i)
-        if (s != null) {
-          val base = XxHash64Function.hash(s, StringType, Seed)
-          var j = 0
-          while (j < numHashes) {
-            // primitive path of xxhash64(int, seed) — identical values to
-            // XxHash64Function.hash(j, IntegerType, base), no boxing
-            val h = XXH64.hashInt(j, base)
-            if (h < mins(j)) mins(j) = h
-            j += 1
+    /** Base-31 polynomial of token `i`'s code points mod 2^31-1 — the
+      * per-token hash of the poly family (`aggregate(split(t, ""), 0L,
+      * (h, c) -> (h * 31 + ascii(c)) % M)`).
+      */
+    def polyHash(i: Int): Long = {
+      var h = 0L
+      var p = start(i)
+      while (p < end(i)) {
+        val c = bytes(p) & 0xFF
+        val cp =
+          if (c < 0x80) { p += 1; c }
+          else if (c < 0xE0) { p += 2; ((c & 0x1F) << 6) | (bytes(p - 1) & 0x3F) }
+          else if (c < 0xF0) {
+            p += 3
+            ((c & 0x0F) << 12) | ((bytes(p - 2) & 0x3F) << 6) | (bytes(p - 1) & 0x3F)
+          } else {
+            p += 4
+            ((c & 0x07) << 18) | ((bytes(p - 3) & 0x3F) << 12) |
+              ((bytes(p - 2) & 0x3F) << 6) | (bytes(p - 1) & 0x3F)
           }
+        h = (h * 31L + cp) % PolyM
+      }
+      h
+    }
+
+    /** Token `i` and token `j` hold the same bytes. */
+    def sameToken(i: Int, j: Int): Boolean =
+      java.util.Arrays.equals(bytes, start(i), end(i), bytes, start(j), end(j))
+  }
+
+  private[graft] object TextTokens {
+
+    private def isSeparator(b: Byte): Boolean = b == ' ' || (b >= '\t' && b <= '\r')
+
+    def apply(text: UTF8String): TextTokens = {
+      val raw = text.getBytes
+      val t = scan(if (raw eq text.getBaseObject) raw.clone() else raw)
+      if (t != null) t else scan(text.toString.getBytes(StandardCharsets.UTF_8))
+    }
+
+    /** Tokens of `bytes` in one pass, or null when they are not well-formed
+      * UTF-8 (checked only when a non-ASCII byte occurs).
+      */
+    private def scan(bytes: Array[Byte]): TextTokens = {
+      // tokens are separated, so there are at most (length + 1) / 2
+      val start = new Array[Int](bytes.length / 2 + 1)
+      val end = new Array[Int](start.length)
+      var n = 0
+      var inToken = false
+      var ascii = true
+      var i = 0
+      while (i < bytes.length) {
+        val b = bytes(i)
+        if (isSeparator(b)) {
+          if (inToken) { end(n - 1) = i; inToken = false }
+        } else {
+          if (!inToken) { start(n) = i; n += 1; inToken = true }
+          if (b < 0) ascii = false
         }
         i += 1
       }
+      if (inToken) end(n - 1) = bytes.length
+      if (!ascii && !wellFormed(bytes)) null else new TextTokens(bytes, start, end, n)
+    }
+
+    /** Well-formed UTF-8 (Unicode table 3-7), the rule the JDK decoder
+      * applies: no overlong forms, no surrogates, nothing above U+10FFFF.
+      */
+    private def wellFormed(b: Array[Byte]): Boolean = {
+      def within(j: Int, lo: Int, hi: Int): Boolean =
+        j < b.length && (b(j) & 0xFF) >= lo && (b(j) & 0xFF) <= hi
+      var i = 0
+      while (i < b.length) {
+        val c = b(i) & 0xFF
+        val len =
+          if (c < 0x80) 1
+          else if (c >= 0xC2 && c <= 0xDF) { if (within(i + 1, 0x80, 0xBF)) 2 else 0 }
+          else if (c >= 0xE0 && c <= 0xEF) {
+            if (within(i + 1, if (c == 0xE0) 0xA0 else 0x80, if (c == 0xED) 0x9F else 0xBF) &&
+                within(i + 2, 0x80, 0xBF)) 3 else 0
+          } else if (c >= 0xF0 && c <= 0xF4) {
+            if (within(i + 1, if (c == 0xF0) 0x90 else 0x80, if (c == 0xF4) 0x8F else 0xBF) &&
+                within(i + 2, 0x80, 0xBF) && within(i + 3, 0x80, 0xBF)) 4 else 0
+          } else 0
+        if (len == 0) return false
+        i += len
+      }
+      true
+    }
+  }
+
+  /** Modulus of the poly hash family: 2^31 - 1. */
+  private val PolyM = 2147483647L
+
+  /** Whitespace tokens of a text ([[TextTokens]]): equal, on every input, to
+    * `array_remove(split(text, "\\s+"), "")`; null stays null.
+    */
+  case class TokensExpr(child: Expression)
+      extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
+
+    override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+    override def dataType: DataType = ArrayType(StringType, containsNull = false)
+    override def prettyName: String = "tokens"
+
+    override protected def nullSafeEval(input: Any): Any = {
+      val t = TextTokens(input.asInstanceOf[UTF8String])
+      val out = new Array[Any](t.n)
+      var i = 0
+      while (i < t.n) {
+        out(i) = UTF8String.fromBytes(t.bytes, t.start(i), t.end(i) - t.start(i))
+        i += 1
+      }
+      new GenericArrayData(out)
+    }
+
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+  }
+
+  /** MinHash signature of a text's word `k`-shingles in one pass: component
+    * `i` is the minimum over shingles of `xxhash64(shingle, i)`, where a
+    * shingle is the space-joined bytes of `k` consecutive tokens — the bytes
+    * `concat_ws(" ", slice(tokens, s, k))` produces. `n <= k` tokens form
+    * one shingle; no tokens gives all `Long.MaxValue`. Each shingle is
+    * joined into one reused buffer and hashed once; the components derive
+    * from that base hash with `XXH64.hashInt`, the primitive form of
+    * `xxhash64(int, seed)`.
+    */
+  case class MinHashExpr(child: Expression, k: Int, numHashes: Int)
+      extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
+
+    override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+    override def dataType: DataType = ArrayType(LongType, containsNull = false)
+    override def prettyName: String = "minhash"
+
+    override protected def nullSafeEval(input: Any): Any = {
+      val t = TextTokens(input.asInstanceOf[UTF8String])
+      val mins = Array.fill(numHashes)(Long.MaxValue)
+      if (t.n > 0) {
+        val width = math.min(t.n, k)
+        // single-space joins never exceed the text span they came from
+        val buf = new Array[Byte](t.bytes.length)
+        var s = 0
+        while (s <= t.n - width) {
+          var len = 0
+          var j = s
+          while (j < s + width) {
+            if (j > s) { buf(len) = ' '; len += 1 }
+            val l = t.end(j) - t.start(j)
+            System.arraycopy(t.bytes, t.start(j), buf, len, l)
+            len += l
+            j += 1
+          }
+          val base = XXH64.hashUnsafeBytes(buf, Platform.BYTE_ARRAY_OFFSET, len, Seed)
+          var c = 0
+          while (c < numHashes) {
+            val h = XXH64.hashInt(c, base)
+            if (h < mins(c)) mins(c) = h
+            c += 1
+          }
+          s += 1
+        }
+      }
       UnsafeArrayData.fromPrimitiveArray(mins)
     }
+
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+  }
+
+  /** Exact Jaccard of two sorted, distinct long sets (the
+    * [[ShingleHashSetExpr]] form) by one merge:
+    * `inter / (|A| + |B| - inter)`, 0.0 when both are empty.
+    */
+  case class SortedSetJaccardExpr(left: Expression, right: Expression)
+      extends BinaryExpression with ExpectsInputTypes with CodegenFallback {
+
+    override def inputTypes: Seq[AbstractDataType] =
+      Seq(ArrayType(LongType), ArrayType(LongType))
+    override def dataType: DataType = DoubleType
+    override def prettyName: String = "sorted_set_jaccard"
+
+    override protected def nullSafeEval(l: Any, r: Any): Any = {
+      val a = l.asInstanceOf[ArrayData]
+      val b = r.asInstanceOf[ArrayData]
+      val na = a.numElements()
+      val nb = b.numElements()
+      var i = 0
+      var j = 0
+      var inter = 0
+      while (i < na && j < nb) {
+        val x = a.getLong(i)
+        val y = b.getLong(j)
+        if (x == y) { inter += 1; i += 1; j += 1 }
+        else if (x < y) i += 1
+        else j += 1
+      }
+      val union = na + nb - inter
+      if (union == 0) 0.0 else inter.toDouble / union.toDouble
+    }
+
+    override protected def withNewChildrenInternal(
+        newLeft: Expression, newRight: Expression): Expression =
+      copy(left = newLeft, right = newRight)
+  }
+
+  /** A per-document double statistic computed from the text's
+    * [[TextTokens]] in one pass; null text gives null.
+    */
+  sealed abstract class TokenStatExpr
+      extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
+
+    override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+    override def dataType: DataType = DoubleType
+
+    protected def stat(t: TextTokens): Double
+
+    override protected def nullSafeEval(input: Any): Any =
+      stat(TextTokens(input.asInstanceOf[UTF8String]))
+  }
+
+  /** Mean token length in characters; 0.0 without tokens. */
+  case class MeanWordLengthExpr(child: Expression) extends TokenStatExpr {
+    override def prettyName: String = "mean_word_length"
+
+    override protected def stat(t: TextTokens): Double =
+      if (t.n == 0) 0.0
+      else {
+        var chars = 0L
+        var i = 0
+        while (i < t.n) { chars += t.chars(i); i += 1 }
+        chars.toDouble / t.n.toDouble
+      }
+
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+  }
+
+  /** Share of tokens holding an ASCII letter; 0.0 without tokens. */
+  case class AlphaWordRatioExpr(child: Expression) extends TokenStatExpr {
+    override def prettyName: String = "alpha_word_ratio"
+
+    override protected def stat(t: TextTokens): Double =
+      if (t.n == 0) 0.0
+      else {
+        var alpha = 0
+        var i = 0
+        while (i < t.n) {
+          var p = t.start(i)
+          var found = false
+          while (!found && p < t.end(i)) {
+            val c = t.bytes(p) | 0x20 // ASCII upper to lower case
+            found = c >= 'a' && c <= 'z'
+            p += 1
+          }
+          if (found) alpha += 1
+          i += 1
+        }
+        alpha.toDouble / t.n.toDouble
+      }
+
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+  }
+
+  /** Gopher symbols per token: each `#`, each run of three or more dots
+    * (once, however long) and each `…` of the text; 0.0 without tokens.
+    */
+  case class SymbolWordRatioExpr(child: Expression) extends TokenStatExpr {
+    override def prettyName: String = "symbol_word_ratio"
+
+    override protected def stat(t: TextTokens): Double =
+      if (t.n == 0) 0.0
+      else {
+        val b = t.bytes
+        var symbols = 0
+        var dots = 0
+        var i = 0
+        while (i < b.length) {
+          val c = b(i)
+          if (c == '.') dots += 1
+          else {
+            if (dots >= 3) symbols += 1
+            dots = 0
+            // '…' is E2 80 A6 in UTF-8
+            if (c == '#' || (c == 0xE2.toByte && i + 2 < b.length &&
+                b(i + 1) == 0x80.toByte && b(i + 2) == 0xA6.toByte)) symbols += 1
+          }
+          i += 1
+        }
+        if (dots >= 3) symbols += 1
+        symbols.toDouble / t.n.toDouble
+      }
+
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+  }
+
+  /** The hashed-bigram linear score of
+    * [[graft.operators.Quality.linearScore]] in one pass: per-token poly
+    * hashes, bigram `(a * 131 + b) % M % numBuckets`, weight
+    * `(bucket + 1) * A % M`, mean weight rescaled to a margin in (-1, 1) and
+    * squashed rationally; fewer than 2 tokens score 0.5. The double
+    * operations run in the order of the column form, so the value is the
+    * same bit for bit.
+    */
+  case class LinearScoreExpr(child: Expression, numBuckets: Int) extends TokenStatExpr {
+    override def prettyName: String = "linear_score"
+
+    private val A = 2654435761L % PolyM
+
+    override protected def stat(t: TextTokens): Double =
+      if (t.n < 2) 0.5
+      else {
+        var prev = t.polyHash(0)
+        var sumW = 0L
+        var i = 1
+        while (i < t.n) {
+          val h = t.polyHash(i)
+          val bucket = (prev * 131L + h) % PolyM % numBuckets
+          sumW += (bucket + 1L) * A % PolyM
+          prev = h
+          i += 1
+        }
+        val margin = (sumW.toDouble / (t.n - 1).toDouble) / PolyM.toDouble * 2.0 - 1.0
+        0.5 + 0.5 * margin / (1.0 + math.abs(margin))
+      }
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -214,15 +541,15 @@ object NativeTextExprs {
       copy(child = newChild)
   }
 
-  /** Distinct hashed word-`k`-shingles of a token array, as longs — the
-    * shuffle-ready form of the shingle set. Window hashes chain the
-    * per-token xxhash64 values (k fold steps per window, order-sensitive)
-    * instead of materializing the joined shingle string, so a document
-    * costs n token hashes + n*k long mixes and ZERO string allocation.
-    * Set semantics match the string shingle set barring 64-bit collisions
-    * within one document pair (~(shingles/doc)^2 / 2^64 — negligible).
-    * Same windowing as `TextFunctions.shingles`: n <= k tokens form one
-    * whole-text shingle; empty input yields an empty array.
+  /** Distinct hashed word-`k`-shingles of a token array, as a sorted long
+    * array — the shuffle-ready form of the shingle set, and the input
+    * [[SortedSetJaccardExpr]] merges. Window hashes chain the per-token
+    * xxhash64 values (k fold steps per window, order-sensitive) instead of
+    * materializing the joined shingle string, so a document costs n token
+    * hashes + n*k long mixes and ZERO string allocation. Set semantics
+    * match the string shingle set barring 64-bit collisions within one
+    * document pair (~(shingles/doc)^2 / 2^64 — negligible). n <= k tokens
+    * form one whole-text shingle; empty input yields an empty array.
     */
   case class ShingleHashSetExpr(child: Expression, k: Int)
       extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
@@ -234,7 +561,7 @@ object NativeTextExprs {
     override protected def nullSafeEval(input: Any): Any = {
       val arr = input.asInstanceOf[ArrayData]
       val n = arr.numElements()
-      if (n == 0) return new GenericArrayData(Array.empty[Long])
+      if (n == 0) return UnsafeArrayData.fromPrimitiveArray(Array.empty[Long])
       val th = new Array[Long](n)
       var i = 0
       while (i < n) {
@@ -243,21 +570,23 @@ object NativeTextExprs {
         i += 1
       }
       val width = if (n <= k) n else k
-      val out = new java.util.HashSet[java.lang.Long]()
+      val hashes = new Array[Long](n - width + 1)
       var start = 0
-      val last = n - width
-      while (start <= last) {
+      while (start < hashes.length) {
         var h = Seed
         var j = 0
         while (j < width) { h = XXH64.hashLong(th(start + j), h); j += 1 }
-        out.add(h)
+        hashes(start) = h
         start += 1
       }
-      val res = new Array[Long](out.size)
-      val it = out.iterator()
-      i = 0
-      while (it.hasNext) { res(i) = it.next(); i += 1 }
-      new GenericArrayData(res)
+      java.util.Arrays.sort(hashes)
+      var distinct = 1
+      i = 1
+      while (i < hashes.length) {
+        if (hashes(i) != hashes(distinct - 1)) { hashes(distinct) = hashes(i); distinct += 1 }
+        i += 1
+      }
+      UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(hashes, distinct))
     }
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -421,27 +750,26 @@ object NativeTextExprs {
       copy(child = newChild)
   }
 
-  /** Gopher word-n-gram repetition statistics
-    * ([[graft.operators.Quality.ngramRepetitionCols]]) in ONE pass: the
-    * composed column-algebra form walked the gram array through five
-    * interpreted higher-order folds (sort fold, best-run fold, dup-collect
-    * fold, then an O(m·n·|dups|) coverage scan with per-step expression-tree
-    * evaluation); this expression computes the identical statistics with
-    * primitive loops — same gram construction (space-joined token slices),
-    * same binary-order sort (UTF8String.compareTo == array_sort), same
-    * strictly-greater best-run update (ties keep the lexicographically
-    * smallest gram), same position-coverage union, same double arithmetic
-    * — so results are bit-identical.
+  /** Gopher word-n-gram repetition statistics of a text
+    * ([[graft.operators.Quality.ngramRepetitionCols]]) in one pass over its
+    * [[TextTokens]]. A gram is `n` consecutive tokens joined by single
+    * spaces; grams are grouped by token bytes in an open-addressing table
+    * (tokens hold no space, so equal grams are equal token runs), and no
+    * gram string is built. The most frequent gram wins with ties to the
+    * smallest in binary order of its joined bytes (`array_sort` order);
+    * characters covered by any gram occurring twice or more are summed
+    * once each; the double arithmetic is that of the column form these
+    * statistics were first defined by.
     */
   case class NgramRepetitionExpr(child: Expression, n: Int)
-      extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
+      extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
 
-    override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
+    override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
     override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("top_ngram_char_frac",
-        org.apache.spark.sql.types.DoubleType, nullable = false),
+        DoubleType, nullable = false),
       org.apache.spark.sql.types.StructField("dup_ngram_char_frac",
-        org.apache.spark.sql.types.DoubleType, nullable = false)))
+        DoubleType, nullable = false)))
     override def prettyName: String = "ngram_repetition"
 
     // NON-null-propagating (r20 ADVICE): the composed column algebra this
@@ -457,71 +785,100 @@ object NativeTextExprs {
       else nullSafeEval(v)
     }
 
+    /** Binary order of the space-joined grams starting at tokens `a`, `b`. */
+    private def compareGrams(t: TextTokens, a: Int, b: Int): Int = {
+      var j = 0
+      while (j < n) {
+        val sa = t.start(a + j)
+        val sb = t.start(b + j)
+        val la = t.end(a + j) - sa
+        val lb = t.end(b + j) - sb
+        val common = math.min(la, lb)
+        var p = 0
+        while (p < common) {
+          val d = (t.bytes(sa + p) & 0xFF) - (t.bytes(sb + p) & 0xFF)
+          if (d != 0) return d
+          p += 1
+        }
+        if (la != lb) {
+          // the shorter token is followed by the joining space, or by the
+          // end of the gram after its last token
+          val last = j == n - 1
+          return if (la < lb) { if (last) -1 else ' ' - (t.bytes(sb + common) & 0xFF) }
+                 else { if (last) 1 else (t.bytes(sa + common) & 0xFF) - ' ' }
+        }
+        j += 1
+      }
+      0
+    }
+
     override protected def nullSafeEval(input: Any): Any = {
-      val arr = input.asInstanceOf[ArrayData]
-      val m = arr.numElements()
-      val toks = new Array[org.apache.spark.unsafe.types.UTF8String](m)
+      val t = TextTokens(input.asInstanceOf[UTF8String])
+      val m = t.n
+      val chars = new Array[Int](m)
+      val th = new Array[Long](m)
       var total = 0L
       var i = 0
       while (i < m) {
-        val s = arr.getUTF8String(i)
-        toks(i) = s
-        if (s != null) total += s.numChars()
+        chars(i) = t.chars(i)
+        total += chars(i)
+        th(i) = XXH64.hashUnsafeBytes(t.bytes, Platform.BYTE_ARRAY_OFFSET + t.start(i),
+          t.end(i) - t.start(i), Seed)
         i += 1
       }
       val g = if (m >= n) m - (n - 1) else 0
-      val sep = org.apache.spark.unsafe.types.UTF8String.fromString(" ")
-      val ngs = new Array[org.apache.spark.unsafe.types.UTF8String](g)
-      i = 0
-      while (i < g) {
-        ngs(i) = org.apache.spark.unsafe.types.UTF8String
-          .concatWs(sep, java.util.Arrays.copyOfRange(toks, i, i + n): _*)
-        i += 1
-      }
-      val sorted = ngs.clone()
-      // UTF8String.compareTo is binary order — identical to array_sort
-      java.util.Arrays.sort(sorted.asInstanceOf[Array[Object]])
-      var bestCnt = 0L
-      var bestNg: org.apache.spark.unsafe.types.UTF8String = null
-      var dups: java.util.HashSet[org.apache.spark.unsafe.types.UTF8String] = null
-      var run = 0L
-      var prev: org.apache.spark.unsafe.types.UTF8String = null
-      i = 0
-      while (i < g) {
-        val x = sorted(i)
-        run = if (prev != null && x.equals(prev)) run + 1 else 1L
-        if (run > bestCnt) { bestCnt = run; bestNg = x }
-        if (run == 2L) {
-          if (dups == null)
-            dups = new java.util.HashSet[org.apache.spark.unsafe.types.UTF8String]()
-          dups.add(x)
+      // group equal grams; group ids in first-seen order
+      var slots = 2
+      while (slots < 2 * g) slots <<= 1
+      val table = Array.fill(slots)(-1)
+      val groupOf = new Array[Int](g)
+      val first = new Array[Int](g)
+      val count = new Array[Int](g)
+      var groups = 0
+      var s = 0
+      while (s < g) {
+        var h = 0L
+        var j = 0
+        while (j < n) { h = (h + th(s + j)) * 0x9E3779B97F4A7C15L; j += 1 }
+        var slot = (h >>> 33).toInt & (slots - 1)
+        var same = false
+        while (table(slot) >= 0 && !same) {
+          val f = first(table(slot))
+          j = 0
+          while (j < n && t.sameToken(f + j, s + j)) j += 1
+          same = j == n
+          if (!same) slot = (slot + 1) & (slots - 1)
         }
-        prev = x
-        i += 1
+        if (!same) { table(slot) = groups; first(groups) = s; groups += 1 }
+        groupOf(s) = table(slot)
+        count(table(slot)) += 1
+        s += 1
       }
+      var best = -1
+      var gi = 0
+      while (gi < groups) {
+        if (best < 0 || count(gi) > count(best) ||
+            (count(gi) == count(best) && compareGrams(t, first(gi), first(best)) < 0))
+          best = gi
+        gi += 1
+      }
+      // a token position is covered when a repeated gram starts in
+      // [p - n + 1, p]
       var cov = 0L
-      if (total > 0 && dups != null) {
-        val isDup = new Array[Boolean](g)
-        i = 0
-        while (i < g) { isDup(i) = dups.contains(ngs(i)); i += 1 }
-        var p = 0 // 0-based token position; covered iff a duplicated gram
-        var q0 = 0 //   starts in [p-n+1, p] clamped to valid starts
-        while (p < m) {
-          q0 = math.max(0, p - (n - 1))
-          val qHi = math.min(p, g - 1)
-          var hit = false
-          var q = q0
-          while (!hit && q <= qHi) { hit = isDup(q); q += 1 }
-          if (hit && toks(p) != null) cov += toks(p).numChars()
-          p += 1
-        }
+      var lastRepeat = -n
+      var p = 0
+      while (p < m) {
+        if (p < g && count(groupOf(p)) >= 2) lastRepeat = p
+        if (lastRepeat >= p - n + 1) cov += chars(p)
+        p += 1
       }
       val top =
-        if (total > 0 && bestCnt > 0)
-          math.min(1.0,
-            (bestCnt * (bestNg.numChars() - (n - 1)).toLong).toDouble /
-              total.toDouble)
-        else 0.0
+        if (total > 0 && best >= 0) {
+          var bestChars = 0L
+          var j = 0
+          while (j < n) { bestChars += chars(first(best) + j); j += 1 }
+          math.min(1.0, (count(best).toLong * bestChars).toDouble / total.toDouble)
+        } else 0.0
       val dup = if (total > 0) cov.toDouble / total.toDouble else 0.0
       new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
         Array[Any](top, dup))
@@ -531,9 +888,8 @@ object NativeTextExprs {
       copy(child = newChild)
   }
 
-  def ngramRepetition(tokenArray: Column, n: Int): Column =
-    ExpressionUtils.column(
-      NgramRepetitionExpr(ExpressionUtils.expression(tokenArray), n))
+  def ngramRepetition(text: Column, n: Int): Column =
+    ExpressionUtils.column(NgramRepetitionExpr(ExpressionUtils.expression(text), n))
 
   /** Pair-emission predicate for [[PairExpandExpr]] — which (i, j) pairs of
     * a posting list survive the in-list expansion.
@@ -903,9 +1259,27 @@ object NativeTextExprs {
   def langIdNative(text: Column, markers: Seq[(String, Seq[String])]): Column =
     ExpressionUtils.column(LangIdExpr(ExpressionUtils.expression(text), markers))
 
-  def minhashSignature(shingleArray: Column, numHashes: Int): Column =
+  def tokens(text: Column): Column =
+    ExpressionUtils.column(TokensExpr(ExpressionUtils.expression(text)))
+
+  def minhashSignature(text: Column, k: Int, numHashes: Int): Column =
+    ExpressionUtils.column(MinHashExpr(ExpressionUtils.expression(text), k, numHashes))
+
+  def sortedSetJaccard(a: Column, b: Column): Column =
     ExpressionUtils.column(
-      MinHashSignatureExpr(ExpressionUtils.expression(shingleArray), numHashes))
+      SortedSetJaccardExpr(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
+
+  def meanWordLength(text: Column): Column =
+    ExpressionUtils.column(MeanWordLengthExpr(ExpressionUtils.expression(text)))
+
+  def alphaWordRatio(text: Column): Column =
+    ExpressionUtils.column(AlphaWordRatioExpr(ExpressionUtils.expression(text)))
+
+  def symbolWordRatio(text: Column): Column =
+    ExpressionUtils.column(SymbolWordRatioExpr(ExpressionUtils.expression(text)))
+
+  def linearScore(text: Column, numBuckets: Int): Column =
+    ExpressionUtils.column(LinearScoreExpr(ExpressionUtils.expression(text), numBuckets))
 
   def shingleHashSet(tokenArray: Column, k: Int): Column =
     ExpressionUtils.column(

@@ -127,6 +127,31 @@ class JoinsSpec extends AnyFunSuite {
     }
   }
 
+  test("connectedComponents: identical components on each side of the small-graph gate") {
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    import classic.implicits._
+    // 8 pairs give 15 distinct oriented edge rows (the self-loop is one row)
+    // over 10 nodes; the gate admits the local union-find at <= 15 rows
+    val pairs = Seq((2L, 1L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L),
+      (10L, 12L), (21L, 20L), (30L, 30L)).toDF("idA", "idB")
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+      10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L, 30L -> 30L)
+    val keys = Seq("spark.graft.cc.localEdgeThreshold", "spark.graft.cc.localNodeThreshold")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      for ((edges, nodes) <- Seq((15, 1000000), (14, 1000000), (500000, 15), (500000, 14))) {
+        spark.conf.set(keys(0), edges.toString)
+        spark.conf.set(keys(1), nodes.toString)
+        val got = graft.operators.Dedup.connectedComponents(pairs, "idA", "idB")
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(got == want, s"edge threshold $edges, node threshold $nodes")
+      }
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
   test("knnJoinExact equals per-query brute-force top-k") {
     val embs = Tables.t(spark, sf, "embeddings")
     val queries = embs.filter(col("vec_id") < 3L)

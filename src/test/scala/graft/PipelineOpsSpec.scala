@@ -181,6 +181,23 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(tied == Set(1L, 4L), tied)
   }
 
+  test("keptByQuality evaluates the score once per cluster member, not per document") {
+    // the counting score has a side effect, so it is nondeterministic, and
+    // Spark then runs it on every row reaching its projection — as it runs
+    // the interpreted text kernels — instead of only on joined rows
+    val calls = spark.sparkContext.longAccumulator("keptByQuality score calls")
+    val score = udf((t: String) => { calls.add(1L); t.length.toDouble }).asNondeterministic()
+    val df = spark.range(100).select(col("id").as("doc_id"),
+      concat(lit("doc "), col("id").cast("string")).as("text"))
+    val clusters = spark.createDataFrame(Seq(
+      (3L, 3L), (7L, 3L), (40L, 40L), (41L, 40L), (42L, 40L))).toDF("node", "component")
+    val kept = Dedup.keptByQuality(df, "doc_id", score(col("text")), clusters)
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    // equal-length texts tie, so each cluster keeps its smallest id
+    assert(kept == (0L until 100L).toSet -- Set(7L, 41L, 42L))
+    assert(calls.value == 5L, s"score ran ${calls.value} times for 5 cluster members")
+  }
+
   test("tokenBudgetSample: budget semantics, determinism, partition invariance") {
     import graft.operators.Sampling
     import graft.functions.TextFunctions

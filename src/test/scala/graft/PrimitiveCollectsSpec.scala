@@ -110,8 +110,7 @@ class PrimitiveCollectsSpec extends AnyFunSuite {
     import classic.implicits._
     val df = Seq((1L, Some("a b a b")), (2L, None)).toDF("id", "text")
     val got = df.select(col("id"),
-        NativeTextExprs.ngramRepetition(
-          graft.functions.TextFunctions.tokens(col("text")), 2).as("r"))
+        NativeTextExprs.ngramRepetition(col("text"), 2).as("r"))
       .select(col("id"), col("r.top_ngram_char_frac").as("top"),
         col("r.dup_ngram_char_frac").as("dup"))
       .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getDouble(2))))
