@@ -11,8 +11,8 @@ import graft.plans.{PercentileRewrite, RollupRouting, StarJoinElimination, SumOf
   *   - [[GraftExtensions]] for `SparkSession.builder.withExtensions` /
   *     `spark.sql.extensions` (the supported Spark 3/4 plugin mechanism);
   *   - [[Graft.install]] for post-hoc injection into an existing session via
-  *     `experimental.extraOptimizations` (what the driver-run `Verify`/
-  *     `Bench` sessions use).
+  *     `experimental.extraOptimizations` (what `Verify` and the
+  *     benchmark's sessions use).
   */
 object Graft {
 
@@ -288,8 +288,14 @@ object Graft {
       spark.conf.set(key, if (cur.isEmpty) rule else s"$cur,$rule")
   }
 
+  /** The one storage root of everything the engine materializes for its
+    * own queries: `target` under the working directory. Cubes and lattice
+    * nodes go under `cubes/`, indexes under `indexes/`.
+    */
+  def targetDir: String = new java.io.File(sys.props("user.dir"), "target").getPath
+
   /** Spark scratch dir (`spark.local.dir`) for long-running driver mains
-    * (Verify, Bench, ScaleProbe). NOT /tmp: a box-level /tmp sweeper
+    * (Verify). NOT /tmp: a box-level /tmp sweeper
     * deleted a >13-minute run's block-manager tree mid-job (observed r16 —
     * FileNotFoundException on shuffle index files). Default is RAM-backed
     * scratch (`/dev/shm`) when present: at bench scale the live shuffle
@@ -303,8 +309,7 @@ object Graft {
     */
   def sparkLocalDir: String =
     sys.env.get("SPARK_GRAFT_LOCAL_DIR").getOrElse {
-      val diskDefault =
-        new java.io.File(sys.props("user.dir"), "target/spark-local").getPath
+      val diskDefault = new java.io.File(targetDir, "spark-local").getPath
       val shm = new java.io.File("/dev/shm")
       if (!shm.isDirectory || !shm.canWrite) diskDefault
       else {

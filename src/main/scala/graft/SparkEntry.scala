@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import Tables.{dsum, dsumSql, withFlat}
 import graft.cube.TpchCube
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Query and oracle contract — see SURVEY.md §7.
   *
   * Each entry in [[queries]] exercises one operator family from
   * SURVEY.md §2; [[oracleSql]] carries the DuckDB-equivalent SQL the
@@ -988,7 +988,7 @@ object SparkEntry {
       // artifact is never parameter-checked after it exists
       Dedup.materializedNgramPairs(Tables.t(s, dir, "documents"),
         "doc_id", "text", threshold = t,
-        path = s"/root/repo/target/indexes/ngram_pairs_" +
+        path = s"${Graft.targetDir}/indexes/ngram_pairs_" +
           s"${new java.io.File(dir).getName}_${Tables.contentTag(dir)}" +
           s"_t${(t * 100).toInt}_v1")
     }
@@ -1736,7 +1736,7 @@ object SparkEntry {
           .select("embedding").head().getSeq[Float](0)
         val store = Similarity.materializedIvfIndex(embs, "vec_id",
           "embedding", cents,
-          s"/root/repo/target/indexes/ivf_${new java.io.File(dir).getName}" +
+          s"${Graft.targetDir}/indexes/ivf_${new java.io.File(dir).getName}" +
             s"_${Tables.contentTag(dir)}_k16_v1")
         Similarity.ivfStoreTopK(store, "vec_id", "embedding", q, k = 10,
           cents, nprobe = 3)
@@ -1750,7 +1750,7 @@ object SparkEntry {
         val cents = kmeansCentroids(s, dir)
         val store = Similarity.materializedIvfIndex(embs, "vec_id",
           "embedding", cents,
-          s"/root/repo/target/indexes/ivf_${new java.io.File(dir).getName}" +
+          s"${Graft.targetDir}/indexes/ivf_${new java.io.File(dir).getName}" +
             s"_${Tables.contentTag(dir)}_k16_v1")
         Similarity.ivfStoreTopKBatch(store, "vec_id", "embedding",
             embs.filter(col("vec_id") < 8), "vec_id", "embedding",
@@ -1772,7 +1772,7 @@ object SparkEntry {
         val q = embs.filter(col("vec_id") === 0L)
           .select("embedding").head().getSeq[Float](0)
         val path =
-          s"/root/repo/target/indexes/ivf_recluster_" +
+          s"${Graft.targetDir}/indexes/ivf_recluster_" +
             s"${new java.io.File(dir).getName}_${Tables.contentTag(dir)}_v1"
         // the whole build-or-read block holds the store's MAINTENANCE
         // lock (r13 ADVICE lineage; r16: it must be the maintenance
@@ -1820,7 +1820,7 @@ object SparkEntry {
         val q = embs.filter(col("vec_id") === 0L)
           .select("embedding").head().getSeq[Float](0)
         val path =
-          s"/root/repo/target/indexes/ivf_ingest_" +
+          s"${Graft.targetDir}/indexes/ivf_ingest_" +
             s"${new java.io.File(dir).getName}_${Tables.contentTag(dir)}_v1"
         val cents = reclusterMemo.getOrElseUpdate(path,
           graft.operators.Artifacts.maintenanceLocked(path) {
@@ -1857,7 +1857,7 @@ object SparkEntry {
         val q = embs.filter(col("vec_id") === 0L)
           .select("embedding").head().getSeq[Float](0)
         val path =
-          s"/root/repo/target/indexes/ivf_delete_" +
+          s"${Graft.targetDir}/indexes/ivf_delete_" +
             s"${new java.io.File(dir).getName}_${Tables.contentTag(dir)}_v1"
         // serve with the memoized centroids that BUILT the layout (the
         // recluster legs' contract) — not the independently recomputed
@@ -1900,7 +1900,7 @@ object SparkEntry {
         val q = embs.filter(col("vec_id") === 0L)
           .select("embedding").head().getSeq[Float](0)
         val path =
-          s"/root/repo/target/indexes/ivf_tombstone_" +
+          s"${Graft.targetDir}/indexes/ivf_tombstone_" +
             s"${new java.io.File(dir).getName}_${Tables.contentTag(dir)}_v1"
         val layoutCents = reclusterMemo.getOrElseUpdate(path,
           graft.operators.Artifacts.maintenanceLocked(path) {
@@ -1936,7 +1936,7 @@ object SparkEntry {
         val q = embs.filter(col("vec_id") === 0L)
           .select("embedding").head().getSeq[Float](0)
         val path =
-          s"/root/repo/target/indexes/ivf_tombfold_" +
+          s"${Graft.targetDir}/indexes/ivf_tombfold_" +
             s"${new java.io.File(dir).getName}_${Tables.contentTag(dir)}_v1"
         val layoutCents = reclusterMemo.getOrElseUpdate(path,
           graft.operators.Artifacts.maintenanceLocked(path) {
@@ -1973,7 +1973,7 @@ object SparkEntry {
         val q = embs.filter(col("vec_id") === 0L)
           .select("embedding").head().getSeq[Float](0)
         val path =
-          s"/root/repo/target/indexes/ivf_manifest_" +
+          s"${Graft.targetDir}/indexes/ivf_manifest_" +
             s"${new java.io.File(dir).getName}_${Tables.contentTag(dir)}_v1"
         val layoutCents = reclusterMemo.getOrElseUpdate(path,
           graft.operators.Artifacts.maintenanceLocked(path) {
@@ -2023,7 +2023,7 @@ object SparkEntry {
         val q = embs.filter(col("vec_id") === 0L)
           .select("embedding").head().getSeq[Float](0)
         val local =
-          s"/root/repo/target/indexes/ivf_pinned_" +
+          s"${Graft.targetDir}/indexes/ivf_pinned_" +
             s"${new java.io.File(dir).getName}_${Tables.contentTag(dir)}_v1"
         val uri = "file://" + local
         val pinId = pinMemo.getOrElseUpdate(local,
@@ -2075,7 +2075,7 @@ object SparkEntry {
         val q = embs.filter(col("vec_id") === 0L)
           .select("embedding").head().getSeq[Float](0)
         val src =
-          s"/root/repo/target/indexes/ivf_migr_src_" +
+          s"${Graft.targetDir}/indexes/ivf_migr_src_" +
             s"${new java.io.File(dir).getName}_${Tables.contentTag(dir)}_v1"
         val dstLocal = src.replace("_migr_src_", "_migr_dst_")
         val dst = "file://" + dstLocal

@@ -151,7 +151,7 @@ object Tables {
     * read as long via `nanosAsLong` and truncate to micros, exactly what
     * DuckDB's reader does), plain TIMESTAMP(MICROS) (read natively),
     * NTZ-annotated micros, and in round 6 an encoding that made every
-    * events-touching query fail in both Verify and Bench. Adapt to whichever
+    * events-touching query fail in Verify. Adapt to whichever
     * this dataset carries instead of assuming one: for raw INT64 the epoch
     * unit is sniffed from the magnitude of one sampled value (epoch-now is
     * ~1.7e9 s / 1.7e12 ms / 1.7e15 us / 1.7e18 ns — four decades apart, so
@@ -170,11 +170,11 @@ object Tables {
     })
 
   /** The [[events]] ts adaptation applied to an arbitrary frame over the
-    * same files — including a STREAMING frame (ScaleProbe's
-    * funnelStream/retentionStream twins read the events through the file
-    * source): the epoch-unit sniff runs on `batch` (one tiny job — a
-    * stream cannot execute jobs at plan time), the conversion itself is
-    * a stateless projection valid on both.
+    * same files — including a STREAMING frame (a file-source stream
+    * feeding `EventPipeline.funnelStream`/`retentionStream`): the
+    * epoch-unit sniff runs on `batch` (one tiny job — a stream cannot
+    * execute jobs at plan time), the conversion itself is a stateless
+    * projection valid on both.
     */
   def adaptEventsTs(df: DataFrame, batch: DataFrame): DataFrame = {
     import org.apache.spark.sql.types._

@@ -1,11 +1,23 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare of `tools/check.py`.
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [<query>[,<query>...]] —
+  * the optional third argument dumps only the named queries and their
+  * oracle entries (seconds instead of minutes).
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    val (sfDir, outDir) = (args(0), args(1))
+    val wanted: String => Boolean = args.lift(2) match {
+      case None => _ => true
+      case Some(names) =>
+        val set = names.split(",").map(_.trim).filter(_.nonEmpty).toSet
+        set.filterNot(SparkEntry.queries.contains).foreach(n => sys.error(s"unknown query $n"))
+        set
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -19,7 +31,7 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val failures = new StringBuilder
-    SparkEntry.queries.foreach { case (name, fn) =>
+    SparkEntry.queries.filter { case (name, _) => wanted(name) }.foreach { case (name, fn) =>
       // drop any stale dump first so a failed query can't masquerade as a
       // (wrong) result from an earlier run
       val dest = new java.io.File(s"$outDir/$name.parquet")
@@ -58,8 +70,10 @@ object Verify {
     // The driver keys its correctness report by output FILENAME (with the
     // .parquet extension) and looks oracle SQL up by that key — round 1's
     // extensionless keys made every query report "no_oracle". Emit BOTH key
-    // forms so either lookup convention matches.
+    // forms so either lookup convention matches. Built AFTER the queries
+    // ran: entries that inline trained artifacts only exist post-run.
     val json = SparkEntry.oracleSql
+      .filter { case (k, _) => wanted(k) }
       .flatMap { case (k, v) => Seq(k -> v, s"$k.parquet" -> v) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -51,6 +51,20 @@ object BucketFooters {
           .getOrElse(read(conf, b, timeColumn))
       }.toMap
     save(dir, buckets)
+    totalsOf(buckets)
+  }
+
+  /** Totals of `dir` from its recorded sidecar, without reading a footer;
+    * [[ensure]] when none was recorded.
+    */
+  def totals(spark: SparkSession, dir: String, bucketColumn: String,
+             timeColumn: String): Totals = {
+    val recorded = load(dir)
+    if (recorded.isEmpty) ensure(spark, dir, bucketColumn, timeColumn)
+    else totalsOf(recorded)
+  }
+
+  private def totalsOf(buckets: Map[String, Bucket]): Totals = {
     val bs = buckets.values.toSeq
     val times = bs.flatMap(_.time)
     Totals(buckets.map { case (k, b) => k -> b.rows },

@@ -48,8 +48,8 @@ package graft.cube
   * naming immutable bucket dirs, exactly [[graft.operators.ManifestArtifactStore]]'s
   * segment pattern), which this layout is one step from: generations are
   * already immutable and pointer-published, only the carry mechanism
-  * changes behind this object. Serving mechanics for that step, MEASURED
-  * by [[graft.tools.MultiGenScanProbe]] on a real two-generation layout:
+  * changes behind this object. Serving mechanics for that step, measured
+  * once on a real two-generation layout:
   * a single multi-path parquet relation over bucket dirs from several
   * generations does NOT plan (`basePath` across generation roots throws
   * CONFLICTING_DIRECTORY_STRUCTURES; without it the partition column is

@@ -38,9 +38,9 @@ import org.apache.spark.sql.functions._
   *      [[RollupMeta]] — counts, DECIMAL sums, derived sums, min/max, HLL +
   *      KMV sketches — and column-aligned to the existing files.
   *   4. *Metadata*: total rows, rows written, NULL counts of the sketched
-  *      columns and of the time column, and (for UTC micros timestamps) the
-  *      time interval come exactly from the new generation's parquet
-  *      footers. After a listing-based detection everything else comes from
+  *      and summed columns and of the time column, and (for UTC micros
+  *      timestamps) the time interval come exactly from the new
+  *      generation's parquet footers. After a listing-based detection everything else comes from
   *      ONE pass over the dirty slice merged with the previous generation
   *      ([[CubeStats.merge]]): unioned NDV sketches, interval and lag
   *      unions, the sub-day OR. The exact-NDV proof value becomes a proven
@@ -250,15 +250,7 @@ object CubeRefresh {
       val nextNode = CubeGenerations.nextDir(ru.path)
       val nodeSchema = spark.read.parquet(ru.path).schema.fieldNames
       // aggregated WITHOUT rewrites: the node rebuild must scan the fresh
-      // cube slice, never be served from the stale node being rebuilt.
-      // Rebuilds preserve the node's declared leaf clustering (tight
-      // row-group min/max on the serving shape's residual column); the
-      // sort must lead with the branch's WRITE partition columns or the
-      // dynamic-partition writer re-sorts (unstably) and drops it.
-      def clustered(df: org.apache.spark.sql.DataFrame, bucket: String) =
-        if (ru.clusterDims.isEmpty) df
-        else df.sortWithinPartitions(
-          ((bucket +: ru.partitionDims) ++ ru.clusterDims).map(col): _*)
+      // cube slice, never be served from the stale node being rebuilt
       graft.Graft.withoutRewrites(spark) {
         if (isSecondary(info, ru)) {
           // a primary-bucket dirty slice straddles SECONDARY buckets
@@ -266,35 +258,16 @@ object CubeRefresh {
           // months), so a partition-level carry would drop the clean
           // ship-months' contributions — rebuild the whole node (it is
           // |dims|×buckets small) from the full new cube generation
-          clustered(buildNode(nextCubeDf, info, ru)
-            .select(nodeSchema.map(col): _*)
-            .repartition(col(ru.timeBucketColumn)), ru.timeBucketColumn)
-            .write.mode("overwrite")
-            .partitionBy(ru.timeBucketColumn +: ru.partitionDims: _*)
-            .parquet(nextNode)
-          // the proof sidecar rides the generation (rewritten below) —
-          // copied AFTER the write: plain overwrite truncates the target
-          val sc = new java.io.File(ru.path, "_measured_ndv.json")
-          if (sc.exists()) {
-            java.nio.file.Files.copy(sc.toPath,
-              new java.io.File(nextNode, "_measured_ndv.json").toPath,
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-            ()
-          }
+          writeNode(buildNode(nextCubeDf, info, ru).select(nodeSchema.map(col): _*),
+            info, ru, nextNode, dynamic = false)
         } else {
+          // dim partition columns nest UNDER the bucket, so writing a
+          // dirty bucket's leaf dirs replaces exactly that bucket's
+          // cells in the staging generation
           CubeGenerations.stageCarry(ru.path, nextNode)(name =>
-            name == "_measured_ndv.json" ||
-              (name.startsWith(bkt + "=") && !dirtyDirs.contains(name)))
-          clustered(buildNode(freshSlice, info, ru)
-            .select(nodeSchema.map(col): _*)
-            .repartition(col(bkt)), bkt)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            // dim partition columns nest UNDER the bucket, so writing a
-            // dirty bucket's leaf dirs replaces exactly that bucket's
-            // cells in the staging generation
-            .partitionBy(bkt +: ru.partitionDims: _*)
-            .parquet(nextNode)
+            name.startsWith(bkt + "=") && !dirtyDirs.contains(name))
+          writeNode(buildNode(freshSlice, info, ru).select(nodeSchema.map(col): _*),
+            info, ru, nextNode, dynamic = true)
         }
       }
       endPhase(s"node:${new java.io.File(CubeGenerations.rootOf(ru.path)).getName}")
@@ -314,15 +287,14 @@ object CubeRefresh {
     // exact whole-generation distinct count runs only when a bound
     // crosses a sketch capacity, and the full path after a rewritten or
     // removed fact file.
-    val sketched = cube.rollups
-      .flatMap(ru => ru.kmvSketches.keys ++ ru.freqSketches.keys ++
-        ru.freqWeighted.flatMap(t => Seq(t._1, t._2))).distinct.sorted
+    val sketched = sketchedColumns(cube.rollups)
+    val nullCols = provedNullColumns(cube.rollups)
     val footers = BucketFooters.ensure(spark, nextCube, bkt, info.timeColumn,
       carriedFrom = Some(cube.cubePath), reread = dirtyDirs)
     val written = dirtyDirs.toSeq.map(footers.rowsByBucket.getOrElse(_, 0L)).sum
     val totalRows = footers.rowsByBucket.values.sum
-    val footerNulls = footers.nulls.filter { case (c, _) => sketched.contains(c) }
-    val missingNulls = sketched.filterNot(footerNulls.contains)
+    val footerNulls = footers.nulls.filter { case (c, _) => nullCols.contains(c) }
+    val missingNulls = nullCols.filterNot(footerNulls.contains)
     // the previous generation's proof values, from ITS descriptor: the
     // caller's registration may predate a foreign refresh
     val prevNdv: Map[String, Long] = CubeMeta.load(cube.cubePath).toSeq
@@ -367,23 +339,6 @@ object CubeRefresh {
         (stats, exact, footerNulls ++ nulls)
       }
     }
-    // re-measured proofs supersede the build-time sidecar: rewrite it
-    // wherever a node keeps one, or a later ensure() would re-register the
-    // stale pre-refresh values (and a stale totalRows could vouch for a
-    // sketch that now saturates)
-    val NullPrefix = "__nulls__:"
-    stagedNodes.foreach { case (_, nextNode) =>
-      val sidecar = new java.io.File(nextNode, "_measured_ndv.json")
-      if (sidecar.exists()) {
-        val m = exactNdv ++
-          nullCounts.map { case (k, v) => (NullPrefix + k) -> v } +
-          ("__total_rows__" -> totalRows)
-        java.nio.file.Files.write(sidecar.toPath,
-          m.toSeq.sortBy(_._1).map { case (k, v) => s""""$k": $v""" }
-            .mkString("{", ", ", "}").getBytes("UTF-8"))
-        ()
-      }
-    }
     // only the files the flattening read count as absorbed
     listing.foreach(l => FactListing.save(nextCube, FactListing.readBy(l, flat)))
     val refreshed = cube.copy(
@@ -424,10 +379,45 @@ object CubeRefresh {
     Result(dirty, written, refreshed, phases.result(), incremental)
   }
 
+  /** The columns whose exact NDV the nodes' sketches need as proof. */
+  private[cube] def sketchedColumns(nodes: Seq[RollupMeta]): Seq[String] =
+    nodes.flatMap(ru => ru.kmvSketches.keys ++ ru.freqSketches.keys ++
+      ru.freqWeighted.flatMap(t => Seq(t._1, t._2))).distinct.sorted
+
+  /** The columns whose exact NULL count the nodes' serving needs as proof:
+    * the sketched ones (sketches skip NULLs) and the summed ones (`avg`
+    * merges as `sum(sum_x) / sum(cnt)`, which counts NULL rows).
+    */
+  private[cube] def provedNullColumns(nodes: Seq[RollupMeta]): Seq[String] =
+    (sketchedColumns(nodes) ++ nodes.flatMap(_.sums.keys)).distinct.sorted
+
+  /** Write node rows to `dest`, partitioned by a bucket column and then
+    * the node's partition dims, each leaf sorted by its cluster dims. The
+    * bucket column is the cube's own for a primary-time node — a day-grain
+    * node's day buckets nest inside it, so a refresh carries and replaces
+    * whole cube buckets of every primary node — and the node's own for a
+    * secondary-time node. The sort leads with the partition columns, or the
+    * dynamic-partition writer re-sorts (unstably) and drops the clustering.
+    * `dynamic` replaces only the partitions written, keeping everything
+    * else staged in `dest`.
+    */
+  private[cube] def writeNode(rows: DataFrame, info: CubeInfo, ru: RollupMeta,
+                              dest: String, dynamic: Boolean): Unit = {
+    val bucket = if (isSecondary(info, ru)) ru.timeBucketColumn else info.timeBucketColumn
+    val parts = bucket +: ru.partitionDims
+    val spread = rows.repartition(col(parts.head))
+    val clustered =
+      if (ru.clusterDims.isEmpty) spread
+      else spread.sortWithinPartitions((parts ++ ru.clusterDims).map(col): _*)
+    val writer = clustered.write.mode("overwrite")
+    (if (dynamic) writer.option("partitionOverwriteMode", "dynamic") else writer)
+      .partitionBy(parts: _*).parquet(dest)
+  }
+
   /** Exact distinct counts of `ndvCols` and NULL counts of `nullCols` in
     * `df`, in one pass (none when both are empty).
     */
-  private def exactCounts(df: => DataFrame, ndvCols: Seq[String], nullCols: Seq[String])
+  private[cube] def exactCounts(df: => DataFrame, ndvCols: Seq[String], nullCols: Seq[String])
       : (Map[String, Long], Map[String, Long]) =
     if (ndvCols.isEmpty && nullCols.isEmpty) (Map.empty, Map.empty)
     else {

@@ -8,16 +8,17 @@ import org.apache.spark.sql.functions._
   * metrics, HLL/KMV/quantile/heavy-hitter sketch columns) and this
   *
   *   1. builds the node from the materialized flat cube with the same
-  *      meta-driven aggregate shapes [[CubeRefresh]] uses for incremental
-  *      rebuilds (so refresh keeps custom nodes current too),
-  *   2. measures the exactness proofs the lossless rewrites require —
-  *      exact NDV and NULL counts of every sketched column, total fact
-  *      rows for the quantile saturation gate,
+  *      meta-driven aggregate shapes and write layout [[CubeRefresh]] uses
+  *      for incremental rebuilds (so refresh keeps custom nodes current too),
+  *   2. records the exactness proofs the lossless rewrites require —
+  *      exact NDV and NULL counts of every sketched column, NULL counts of
+  *      every summed column, total fact rows for the quantile saturation
+  *      gate — once per cube generation (see [[withProofs]]),
   *   3. attaches the node to the catalog and descriptor sidecar,
   *      coarsest-first (fewest dims), so [[graft.plans.RollupRouting]]
   *      serves matching aggregates from it automatically.
   *
-  * [[RollupCube]] (the TPC-H lattice) is one instance of this machinery;
+  * [[RollupCube]] (the TPC-H lattice) is one set of descriptors over it;
   * EventsCubeSpec drives the same path over a single-table events cube.
   * At 100 TB this is the "declare an index" operation: one pass over the
   * facts per node, everything downstream is metadata.
@@ -31,25 +32,14 @@ object RollupBuild {
     // builds and proofs run with rewrites OFF: the measurement must never
     // route through the sketches it is meant to vouch for
     graft.Graft.withoutRewrites(spark) {
-      val flat = spark.read.parquet(cube.cubePath)
+      def flat = spark.read.parquet(cube.cubePath)
       // attach the node's CURRENT generation (CubeGenerations) — after a
       // refresh the serving dir is a `.gen-N` sibling of the build root
       val ru0r = ru0.copy(path = CubeGenerations.currentDir(ru0.path))
-      if (!new java.io.File(ru0r.path, "_SUCCESS").exists()) {
-        val node = CubeRefresh.buildNode(flat, cube.info, ru0r)
-          .repartition(col(ru0r.timeBucketColumn))
-        // sort prefix = the write's partition columns, or the dynamic-
-        // partition writer re-sorts (unstably) and drops the clustering
-        val clustered =
-          if (ru0r.clusterDims.isEmpty) node
-          else node.sortWithinPartitions(
-            ((ru0r.timeBucketColumn +: ru0r.partitionDims) ++ ru0r.clusterDims)
-              .map(col): _*)
-        clustered.write.mode("overwrite")
-          .partitionBy(ru0r.timeBucketColumn +: ru0r.partitionDims: _*)
-          .parquet(ru0r.path)
-      }
-      val ru = withProofs(flat, ru0r)
+      if (!new java.io.File(ru0r.path, "_SUCCESS").exists())
+        CubeRefresh.writeNode(CubeRefresh.buildNode(flat, cube.info, ru0r),
+          cube.info, ru0r, ru0r.path, dynamic = false)
+      val ru = withProofs(spark, cube, flat, ru0r)
       val attached = cube.copy(rollups =
         (cube.rollups.filterNot(_.path == ru.path) :+ ru)
           .sortBy(_.dims.size))
@@ -104,20 +94,26 @@ object RollupBuild {
       clusterDims = clusterDims)
   }
 
-  /** Measure the exactness proofs for a node's sketched columns. */
-  private def withProofs(flat: DataFrame, ru: RollupMeta): RollupMeta = {
-    val cols = (ru.kmvSketches.keys ++ ru.freqSketches.keys ++
-      ru.freqWeighted.flatMap(t => Seq(t._1, t._2))).toSeq.distinct.sorted
-    if (cols.isEmpty && ru.quantileSketches.isEmpty) return ru
-    val row = flat.select(
-      (cols.map(c => countDistinct(col(c)).as(c))
-        ++ cols.map(c => count(when(col(c).isNull, 1)).as("n_" + c))
-        :+ count(lit(1)).as("__total_rows__")): _*).head()
-    val ndv = cols.zipWithIndex.map { case (c, i) => c -> row.getLong(i) }.toMap
-    val nulls = cols.zipWithIndex.map { case (c, i) =>
-      c -> row.getLong(cols.size + i) }.toMap
-    ru.copy(kmvExactNdv = ru.kmvExactNdv ++ ndv,
-      exactNullCount = ru.exactNullCount ++ nulls,
-      totalRows = Some(row.getLong(2 * cols.size)))
+  /** A node's exactness proofs, measured once per cube generation. The
+    * row total and the NULL counts of the sketched and summed columns of
+    * every node of the cube's generation come from the cube's bucket
+    * footers; an exact NDV is measured only for a sketched column that no
+    * node of that generation carries yet. A summed column's NULL count is
+    * what the `avg` merge requires to be 0 ([[graft.plans.RollupRouting]]).
+    */
+  private def withProofs(spark: SparkSession, cube: RegisteredCube,
+                         flat: => DataFrame, ru: RollupMeta): RollupMeta = {
+    val info = cube.info
+    val footers = BucketFooters.totals(spark, cube.cubePath,
+      info.timeBucketColumn, info.timeColumn)
+    val carriedNdv = cube.rollups.flatMap(_.kmvExactNdv).toMap
+    val sketched = CubeRefresh.sketchedColumns(Seq(ru))
+    val nullCols = CubeRefresh.provedNullColumns(cube.rollups :+ ru)
+    val footerNulls = footers.nulls.filter { case (c, _) => nullCols.contains(c) }
+    val (ndv, nulls) = CubeRefresh.exactCounts(flat,
+      sketched.filterNot(carriedNdv.contains), nullCols.filterNot(footerNulls.contains))
+    ru.copy(kmvExactNdv = ru.kmvExactNdv ++ carriedNdv ++ ndv,
+      exactNullCount = ru.exactNullCount ++ footerNulls ++ nulls,
+      totalRows = Some(footers.rowsByBucket.values.sum))
   }
 }

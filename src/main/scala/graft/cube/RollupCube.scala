@@ -155,50 +155,21 @@ object RollupCube {
       col("l_extendedprice") * (lit(1.0) - col("l_discount")) * (lit(1.0) + col("l_tax"))
   }
 
-  def rollupPath(sfDir: String): String = {
-    val sf = new java.io.File(sfDir).getName
-    // v8: adds supplier heavy-hitters sketches (count + price-weighted)
-    s"/root/repo/target/cubes/tpch_${sf}_${graft.Tables.contentTag(sfDir)}_rollup_v9"
-  }
+  /** Root directory of one lattice node for `sfDir`. v10: every node is
+    * built by the generic [[RollupBuild.materialize]] from the flat cube.
+    */
+  private def nodePath(sfDir: String, node: String): String =
+    s"${graft.Graft.targetDir}/cubes/tpch_${new java.io.File(sfDir).getName}_" +
+      s"${Tables.contentTag(sfDir)}_rollup_${node}_v10"
 
-  def coarsePath(sfDir: String): String = {
-    val sf = new java.io.File(sfDir).getName
-    s"/root/repo/target/cubes/tpch_${sf}_${graft.Tables.contentTag(sfDir)}_rollup_coarse_v6"
-  }
-
-  def nationsPath(sfDir: String): String = {
-    val sf = new java.io.File(sfDir).getName
-    s"/root/repo/target/cubes/tpch_${sf}_${graft.Tables.contentTag(sfDir)}_rollup_nations_v3"
-  }
-
-  def slicePath(sfDir: String): String = {
-    val sf = new java.io.File(sfDir).getName
-    s"/root/repo/target/cubes/tpch_${sf}_${graft.Tables.contentTag(sfDir)}_rollup_slice_v2"
-  }
-
-  def q1Path(sfDir: String): String = {
-    val sf = new java.io.File(sfDir).getName
-    s"/root/repo/target/cubes/tpch_${sf}_${graft.Tables.contentTag(sfDir)}_rollup_rf_ls_v4"
-  }
-
-  def q3Path(sfDir: String): String = {
-    val sf = new java.io.File(sfDir).getName
-    // v3: clustering sort leads with the write's partition columns (v2's
-    // sort was re-sorted away by the dynamic-partition writer)
-    s"/root/repo/target/cubes/tpch_${sf}_${graft.Tables.contentTag(sfDir)}_rollup_okey_v4"
-  }
-
-  def ordersNationsPath(sfDir: String): String = {
-    val sf = new java.io.File(sfDir).getName
-    s"/root/repo/target/cubes/tpch_${sf}_${graft.Tables.contentTag(sfDir)}_rollup_onations_v3"
-  }
-
-  def marketPath(sfDir: String): String = {
-    val sf = new java.io.File(sfDir).getName
-    // v4: clustering sort leads with the write's partition columns (v3's
-    // sort was re-sorted away by the dynamic-partition writer)
-    s"/root/repo/target/cubes/tpch_${sf}_${graft.Tables.contentTag(sfDir)}_rollup_omarket_v5"
-  }
+  def rollupPath(sfDir: String): String = nodePath(sfDir, "fine")
+  def coarsePath(sfDir: String): String = nodePath(sfDir, "coarse")
+  def nationsPath(sfDir: String): String = nodePath(sfDir, "nations")
+  def slicePath(sfDir: String): String = nodePath(sfDir, "slice")
+  def q1Path(sfDir: String): String = nodePath(sfDir, "rf_ls")
+  def q3Path(sfDir: String): String = nodePath(sfDir, "okey")
+  def ordersNationsPath(sfDir: String): String = nodePath(sfDir, "onations")
+  def marketPath(sfDir: String): String = nodePath(sfDir, "omarket")
 
   def meta(sfDir: String): RollupMeta = RollupMeta(
     path = rollupPath(sfDir),
@@ -287,239 +258,25 @@ object RollupCube {
     ordersMeta(sfDir, marketDims, marketPath(sfDir),
       partitionDims = Seq("c_region"), clusterDims = Seq("p_type"))
 
+  /** The TPC-H lattice, in build order. The fine node comes first: it
+    * carries every sketched column, so its exact-NDV measurement is the
+    * only one, and every later node carries its proofs.
+    */
+  def metas(sfDir: String): Seq[RollupMeta] =
+    Seq(meta(sfDir), coarseMeta(sfDir), sliceMeta(sfDir), q1Meta(sfDir),
+      nationsMeta(sfDir), marketMeta(sfDir), ordersNationsMeta(sfDir), q3Meta(sfDir))
+
   private val lock = new Object
 
-  /** Materialize (once per scale factor) the rollup from the flat cube and
-    * attach its metadata to the registered cube so [[graft.plans.RollupRouting]]
-    * can serve matching aggregates from it automatically.
+  /** Materialize (once per scale factor) the flat cube and every node of
+    * the lattice through the generic build, and attach them so
+    * [[graft.plans.RollupRouting]] serves matching aggregates from them.
+    * Returns the fine node's current generation directory.
     */
   def ensure(spark: SparkSession, sfDir: String): String = lock.synchronized {
-    // resolve the fine node's CURRENT generation (CubeGenerations): after
-    // a refresh the serving dir is a `.gen-N` sibling of the build root
-    val path = CubeGenerations.currentDir(rollupPath(sfDir))
     val cube = TpchCube.ensure(spark, sfDir)
-    // builds and proof measurements run with the engine's rewrites OFF:
-    // an aggregate over the cube must never be served from a rollup node
-    // that is mid-(re)build, and the exactness proofs must never route
-    // through the sketches they vouch for
-    graft.Graft.withoutRewrites(spark) { ensureBuilds(spark, sfDir, cube, path) }
-  }
-
-  private def ensureBuilds(spark: SparkSession, sfDir: String,
-                           cube: RegisteredCube, path: String): String = {
-    val marker = new java.io.File(path, "_SUCCESS")
-    if (!marker.exists()) {
-      val flat = spark.read.parquet(cube.cubePath)
-      // Merge semantics (RollupRouting) require every rolled-up metric to be
-      // a null-free DOUBLE: avg merges as sum(sum_x)/sum(cnt) where cnt
-      // counts ALL rows, which diverges from Average's NULL-skipping if any
-      // value is NULL. Verified here, once, where we scan the table anyway.
-      val metricCols = sumMetrics.keys.toSeq.sorted
-      metricCols.foreach { c =>
-        require(flat.schema(c).dataType ==
-          org.apache.spark.sql.types.DoubleType,
-          s"rollup metric $c must be DOUBLE, got ${flat.schema(c).dataType}")
-      }
-      val nullRow = flat
-        .select(metricCols.map(c => count(when(col(c).isNull, 1)).as(c)): _*)
-        .head()
-      metricCols.zipWithIndex.foreach { case (c, i) =>
-        require(nullRow.getLong(i) == 0L,
-          s"rollup metric $c has ${nullRow.getLong(i)} NULLs; " +
-            "avg/sum merge over the rollup would be wrong")
-      }
-      buildFromFlat(flat, dims, path)
-    }
-    // Q1 lattice node (day × returnflag × linestatus) is NOT a dim-subset
-    // of the fine rollup, so it too is built from the facts — a second pass
-    // whose output is |days| × 6 rows
-    if (!new java.io.File(CubeGenerations.currentDir(q1Path(sfDir)),
-        "_SUCCESS").exists())
-      buildFromFlat(
-        spark.read.parquet(cube.cubePath)
-          .withColumn("g_dbucket", TpchCube.dayBucketExpr("l_shipdate")),
-        q1Dims :+ "g_dbucket",
-        q1Path(sfDir),
-        freq = false)
-    // order-key projection node (the Q3 shape): day grain, lean metrics,
-    // mktsegment leaf partitions under each ship-month dir
-    if (!new java.io.File(CubeGenerations.currentDir(q3Path(sfDir)),
-        "_SUCCESS").exists())
-      buildFromFlat(
-        spark.read.parquet(cube.cubePath)
-          .withColumn("g_dbucket", TpchCube.dayBucketExpr("l_shipdate")),
-        q3Dims :+ "g_dbucket",
-        q3Path(sfDir),
-        freq = false, sketches = false,
-        partitionDims = Seq("c_mktsegment"),
-        clusterDims = Seq("o_orderdate"))
-    // Cascade: the coarse lattice node is re-aggregated FROM the fine
-    // rollup, never from the fact table — every stored metric is mergeable
-    // (decimal sums re-sum, min/max nest, count sums, HLL and KMV sketches
-    // union), so the cascade is exactly what a 100 TB build does: one pass
-    // over the facts, then pennies per extra lattice node.
-    def cascade(nodeDims: Seq[String], outPath: String,
-                partitionDims: Seq[String] = Nil): Unit =
-      if (!new java.io.File(CubeGenerations.currentDir(outPath),
-          "_SUCCESS").exists()) {
-        val fine = spark.read.parquet(path)
-        val sumAgg = (sumMetrics.values ++ derivedSums.values).toSeq.sorted
-          .map(c => sum(col(c)).as(c))
-        val minAgg = minMetrics.values.toSeq.sorted.map(c => min(col(c)).as(c))
-        val maxAgg = maxMetrics.values.toSeq.sorted.map(c => max(col(c)).as(c))
-        val qskAgg = quantileMetrics.values.toSeq.sorted.map(c =>
-          org.apache.spark.sql.graft.QuantileSketch.qskUnion(col(c), quantileK).as(c))
-        val freqAgg = (freqMetrics.values ++ freqWeightedMetrics.map(_._3))
-          .toSeq.sorted.map(c =>
-            org.apache.spark.sql.graft.FreqSketch.freqMerge(col(c), freqK).as(c))
-        fine.groupBy((col("g_tbucket") +: nodeDims.map(col)): _*)
-          .agg(sum(col("cnt")).as("cnt"),
-            (sumAgg ++ minAgg ++ maxAgg ++ qskAgg ++ freqAgg
-              :+ hll_union_agg(col("custkey_hll")).as("custkey_hll")
-              :+ org.apache.spark.sql.graft.KmvSketch
-                  .kmvUnion(col("custkey_kmv"), kmvK).as("custkey_kmv")): _*)
-          .repartition(1)
-          .write.mode("overwrite")
-          .partitionBy("g_tbucket" +: partitionDims: _*).parquet(outPath)
-      }
-    cascade(coarseDims, coarsePath(sfDir))
-    cascade(sliceDims, slicePath(sfDir))
-    // secondary-time nodes (month-of-o_orderdate buckets) are NOT
-    // dim-subsets of any ship-date node — each is one extra lean pass over
-    // the facts, partitioned by its own bucket so order-date intervals
-    // partition-prune it
-    def ordersNode(nodeDims: Seq[String], outPath: String,
-                   partitionDims: Seq[String],
-                   clusterDims: Seq[String] = Nil): Unit =
-      if (!new java.io.File(CubeGenerations.currentDir(outPath),
-          "_SUCCESS").exists())
-        buildFromFlat(
-          spark.read.parquet(cube.cubePath)
-            .withColumn("g_obucket", TpchCube.bucketExpr("o_orderdate")),
-          nodeDims, outPath, freq = false,
-          bucketCol = "g_obucket", sketches = false,
-          partitionDims = partitionDims, clusterDims = clusterDims)
-    ordersNode(ordersNationsDims, ordersNationsPath(sfDir), Seq("s_region"))
-    // p_type is the Q8 shape's row-group predicate inside each c_region
-    // leaf — cluster on it so its min/max stats are tight per row group
-    ordersNode(marketDims, marketPath(sfDir), Seq("c_region"),
-      clusterDims = Seq("p_type"))
-    // nations node: serves the Q7-shape (supplier nation × customer nation ×
-    // year) from |nations|² × buckets rows instead of the near-fact-grain
-    // fine node — the reference's flagship 82× query (BenchMarkDetails
-    // .org:148) gets its own lattice node for pennies (one cascade pass)
-    cascade(nationsDims, nationsPath(sfDir), partitionDims = Seq("s_nation"))
-    // EXACT distinct + NULL counts of the sketched columns (one tiny pass
-    // over the flat cube, persisted) — the lossless count(DISTINCT) and
-    // TopN-from-sketch rewrites may only fire when the TRUE cardinality
-    // fits the sketch (and, for group-by serves, the column provably has
-    // no NULLs — sketches skip them); the approximate NDV stats in the
-    // cube sidecar are estimates, not proof.
-    // The sidecar also records the fact row count (key "__total_rows__") —
-    // the saturation proof for lossless percentile serving from the
-    // quantile sketches (any merged subset of cells holds <= total values)
-    val TotalRowsKey = "__total_rows__"
-    val NullPrefix = "__nulls__:"
-    val ndvSidecar = new java.io.File(path, "_measured_ndv.json")
-    val measured: Map[String, Long] =
-      if (ndvSidecar.exists()) {
-        val txt = new String(java.nio.file.Files.readAllBytes(ndvSidecar.toPath), "UTF-8")
-        "\"([^\"]+)\"\\s*:\\s*(\\d+)".r.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toLong).toMap
-      } else {
-        val m0 = meta(sfDir)
-        val cols = (m0.kmvSketches.keys ++ m0.freqSketches.keys ++
-          m0.freqWeighted.flatMap(t => Seq(t._1, t._2))).toSeq.distinct.sorted
-        val row = spark.read.parquet(cube.cubePath)
-          .select((cols.map(c => countDistinct(col(c)).as(c))
-            ++ cols.map(c => count(when(col(c).isNull, 1)).as(NullPrefix + c))
-            :+ count(lit(1)).as(TotalRowsKey)): _*).head()
-        val m = cols.zipWithIndex.map { case (c, i) => c -> row.getLong(i) }.toMap ++
-          cols.zipWithIndex.map { case (c, i) =>
-            (NullPrefix + c) -> row.getLong(cols.size + i) }.toMap +
-          (TotalRowsKey -> row.getLong(2 * cols.size))
-        java.nio.file.Files.write(ndvSidecar.toPath,
-          m.toSeq.sortBy(_._1).map { case (k, v) => s""""$k": $v""" }
-            .mkString("{", ", ", "}").getBytes("UTF-8"))
-        m
-      }
-    val exactNdv = measured.view
-      .filterKeys(k => k != TotalRowsKey && !k.startsWith(NullPrefix)).toMap
-    val nullCounts = measured.view.collect {
-      case (k, v) if k.startsWith(NullPrefix) => k.stripPrefix(NullPrefix) -> v
-    }.toMap
-    val totalRows = measured.get(TotalRowsKey)
-    // smallest nodes first: the routing walk stops at the first fit
-    // (coarse ~ |coarseDims| x months; q1 ~ 6 x days; fine ~ |dims| x months)
-    val registered = cube.copy(rollups =
-      Seq(coarseMeta(sfDir), sliceMeta(sfDir), q1Meta(sfDir),
-          nationsMeta(sfDir), marketMeta(sfDir), ordersNationsMeta(sfDir),
-          meta(sfDir), q3Meta(sfDir))
-        .map(ru => ru.copy(
-          // registrations carry the node's CURRENT generation dir
-          path = CubeGenerations.currentDir(ru.path),
-          kmvExactNdv = exactNdv, exactNullCount = nullCounts,
-          totalRows = totalRows)))
-    CubeCatalog.register(registered)
-    CubeMeta.save(registered)
-    path
-  }
-
-  /** One lattice node straight from the facts: re-aggregable counts,
-    * DECIMAL sums (plain + derived), min/max, HLL + KMV sketches.
-    */
-  private def buildFromFlat(flat: DataFrame, groupDims: Seq[String],
-                            outPath: String, freq: Boolean = true,
-                            bucketCol: String = "g_tbucket",
-                            sketches: Boolean = true,
-                            partitionDims: Seq[String] = Nil,
-                            clusterDims: Seq[String] = Nil): Unit = {
-    val sums = sumMetrics.toSeq.sortBy(_._2).map { case (src, dst) =>
-      sum(col(src).cast("decimal(28,6)")).as(dst)
-    }
-    val derived = derivedSums.toSeq.sortBy(_._2).map { case (key, dst) =>
-      sum(derivedCol(key).cast("decimal(28,6)")).as(dst)
-    }
-    val mins = minMetrics.toSeq.sortBy(_._2).map { case (src, dst) => min(col(src)).as(dst) }
-    val maxs = maxMetrics.toSeq.sortBy(_._2).map { case (src, dst) => max(col(src)).as(dst) }
-    val qsks =
-      if (!sketches) Nil
-      else quantileMetrics.toSeq.sortBy(_._2).map { case (src, dst) =>
-        org.apache.spark.sql.graft.QuantileSketch
-          .qskSketch(col(src), quantileK).as(dst)
-      }
-    val freqs =
-      if (!freq || !sketches) Nil
-      else freqMetrics.toSeq.sortBy(_._2).map { case (src, dst) =>
-        org.apache.spark.sql.graft.FreqSketch.freqSketch(col(src), freqK).as(dst)
-      } ++ freqWeightedMetrics.sortBy(_._3).map { case (src, w, dst) =>
-        org.apache.spark.sql.graft.FreqSketch
-          .freqSketchBy(col(src), col(w), freqK).as(dst)
-      }
-    val distincts =
-      if (!sketches) Nil
-      else Seq(
-        hll_sketch_agg(col("o_custkey")).as("custkey_hll"),
-        org.apache.spark.sql.graft.KmvSketch
-          .kmvSketch(col("o_custkey"), kmvK).as("custkey_kmv"))
-    val agged = flat.groupBy((col(bucketCol) +: groupDims.map(col)): _*)
-      .agg(count(lit(1)).as("cnt"),
-        (sums ++ derived ++ mins ++ maxs ++ qsks ++ freqs ++ distincts): _*)
-      .repartition(col(bucketCol))
-    // Cluster rows inside each leaf by the serving shape's row-group
-    // predicate column (Druid's secondary sort) — invisible at sf0.1 (one
-    // row group per leaf) but the pushed-footer-predicate skip at 100 TB
-    // file sizes. The sort MUST lead with the write's partition columns:
-    // the dynamic-partition writer requires rows ordered by them and
-    // inserts its own (unstable) sort when the incoming ordering is not a
-    // prefix-match — which would silently destroy the clustering
-    // (CubeRefreshSpec locks per-file monotonicity against this).
-    val clustered =
-      if (clusterDims.isEmpty) agged
-      else agged.sortWithinPartitions(
-        ((bucketCol +: partitionDims) ++ clusterDims).map(col): _*)
-    clustered.write.mode("overwrite")
-      .partitionBy(bucketCol +: partitionDims: _*).parquet(outPath)
+    metas(sfDir).foreach(RollupBuild.materialize(spark, cube.info.name, _))
+    CubeGenerations.currentDir(rollupPath(sfDir))
   }
 
   /** Serve a grouped aggregate from the rollup: `groupCols` must be a
@@ -536,7 +293,7 @@ object RollupCube {
       if (groupCols.forall(c => coarseDims.contains(c) || c == "g_tbucket"))
         coarsePath(sfDir)
       else rollupPath(sfDir)
-    spark.read.parquet(path)
+    spark.read.parquet(CubeGenerations.currentDir(path))
       .groupBy(groupCols.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
   }

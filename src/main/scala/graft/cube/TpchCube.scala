@@ -1,7 +1,7 @@
 package graft.cube
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.{expr, month, year}
 
 import graft.Tables
 
@@ -160,58 +160,22 @@ object TpchCube {
 
   def cubePath(sfDir: String): String = {
     val sf = new java.io.File(sfDir).getName
-    // v2: dimension-clustered row order within each time bucket; the
-    // content tag re-keys the artifact whenever the testdata bytes change
-    s"/root/repo/target/cubes/tpch_${sf}_${graft.Tables.contentTag(sfDir)}_v3"
+    // v4: built by the generic CubeSource.materialize; the content tag
+    // re-keys the artifact whenever the testdata bytes change
+    s"${graft.Graft.targetDir}/cubes/tpch_${sf}_${Tables.contentTag(sfDir)}_v4"
   }
 
   private val lock = new Object
 
-  /** Materialize (if needed) and register the flat cube for `sfDir`.
-    * Idempotent; the parquet write happens once per scale factor.
+  /** Materialize (if needed) and register the flat cube for `sfDir`: the
+    * TPC-H descriptor ([[info]]) over the generic [[graft.sources.CubeSource.materialize]].
+    * Idempotent; the parquet write happens once per scale factor, and the
+    * lattice nodes attached to the cube stay attached.
     */
   def ensure(spark: SparkSession, sfDir: String): RegisteredCube = lock.synchronized {
-    // bucketExpr is UTC-fixed, so the build is correct under any session
-    // time zone — no session override needed (or wanted: flipping the
-    // user's TZ as a side effect would change their query semantics).
-    // The SERVING directory is the root's CURRENT generation
-    // (CubeGenerations): the bare root for a fresh/legacy build, the
-    // pointer's target after any refresh — registrations always carry
-    // the resolved generation, never the mutable root identity.
-    val path = CubeGenerations.currentDir(cubePath(sfDir))
-    val marker = new java.io.File(path, "_SUCCESS")
-    val tablePaths = roleOfTable.keys.map { t =>
-      t -> CubeCatalog.normalizePath(Tables.path(sfDir, t))
-    }.toMap
-    if (!marker.exists()) {
-      // listed BEFORE the sources are read, for CubeRefresh's detection
-      val listing = FactListing.listFact(info, tablePaths)
-      // rows within each time bucket are CLUSTERED by the declared
-      // clusterDims (CubeInfo) — the layout-level stand-in for Druid's
-      // per-dimension inverted indexes: parquet row-group/page min-max
-      // stats on a sorted column actually skip IO for dim-sliced queries.
-      // Locally a bucket is one row group (no visible effect); at 100 TB a
-      // month holds thousands of row groups and a `c_mktsegment = X AND
-      // s_nation = Y` slice reads ~1/|segment| of them instead of all.
-      // The sort leads with the partition column so the dynamic-partition
-      // writer reuses it instead of re-sorting (see CubeRefresh).
-      val flat = Tables.flat(spark, sfDir)
-      flat
-        .withColumn("g_tbucket", bucketExpr("l_shipdate"))
-        .repartition(col("g_tbucket"))
-        .sortWithinPartitions(("g_tbucket" +: info.clusterDims).map(col): _*)
-        .write.mode("overwrite").partitionBy("g_tbucket").parquet(path)
-      listing.foreach(l => FactListing.save(path, FactListing.readBy(l, flat)))
-      BucketFooters.ensure(spark, path, "g_tbucket", info.timeColumn)
-    }
     val sf = new java.io.File(sfDir).getName
-    val stats = CubeStats.ensure(spark, info, path)
-    val withStats = CubeStats.withStats(info.copy(name = s"${CubeName}_$sf"), stats)
-    // preserve rollup metadata attached by RollupCube.ensure
-    val existingRollups = CubeCatalog.get(withStats.name).map(_.rollups).getOrElse(Nil)
-    val cube = RegisteredCube(withStats, path, tablePaths, existingRollups)
-    CubeCatalog.register(cube)
-    CubeMeta.save(cube)
-    cube
+    val tablePaths = roleOfTable.keys.map(t => t -> Tables.path(sfDir, t)).toMap
+    graft.sources.CubeSource.materialize(spark, info.copy(name = s"${CubeName}_$sf"),
+      tablePaths, cubePath(sfDir))
   }
 }

@@ -185,7 +185,7 @@ object Bpe {
     * depth is capped, at the price of nMerges/rematerializeEvery
     * vocabulary-sized materializations (the word table, never the corpus).
     *
-    * Default 192, measured not guessed (`tools.BpeTrainProbe`): at gate
+    * Default 192, measured not guessed (timed training runs): at gate
     * scale each checkpoint costs more than the short-chain replay it
     * saves (106-merge training: bounded-at-64 33 s vs naive 23 s — this
     * corpus's words fully fuse at 106 merges, so the quadratic term never
@@ -205,7 +205,7 @@ object Bpe {
     * taken per count round — the 32k-vocabulary job-count bound. The
     * sequential trainer runs one count job (plus a driver `collect` of
     * one row) PER MERGE: 32k merges = 32k scheduled jobs, and at the
-    * measured ~0.20 s/job of pure per-job overhead (BpeTrainProbe,
+    * measured ~0.20 s/job of pure per-job overhead (timed training runs,
     * local[32] at sf0.01 — cluster schedulers are no faster) that is
     * ~107 minutes of scheduling alone before any real work. Batching
     * takes the top pairs of ONE count round greedily, skipping any pair
@@ -215,7 +215,7 @@ object Bpe {
     * so each taken pair carries its true sequential count. Job count
     * drops to ~nMerges/batch (BpeSpec locks the measured bound: a
     * batch=8 run schedules well under half the jobs of batch=1 for the
-    * same merge table). Measured (BpeTrainProbe, 96 merges, sf0.01
+    * same merge table). Measured (96 merges, sf0.01
     * local[32]): sequential 19 s (~0.20 s/round), batch=8 3.6 s,
     * batch=32 2.3 s — a 32k-merge run drops from ~1.8 h of per-merge
     * rounds to minutes (batch=256 ≈ 125 count rounds).

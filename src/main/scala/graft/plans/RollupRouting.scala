@@ -535,11 +535,18 @@ case class RollupRouting(spark: SparkSession)
     }
 
     // Sum/Average merge semantics assume the stored rollup sums were built
-    // from a null-free double metric: a metric with NULLs breaks avg
-    // (sum(cnt) counts all rows, Average ignores NULLs) and a decimal one
-    // changes result types. Null-freedom is verified at rollup build time
-    // (RollupCube.ensure — parquet attrs are always `nullable` so it can't
-    // be checked here); the type is checked statically.
+    // from a double metric: a decimal one changes result types, checked
+    // statically here. Average also needs the metric NULL-free — sum(cnt)
+    // counts all rows, Average ignores NULLs — and parquet attrs are always
+    // `nullable`, so that is a proof the node carries instead: the
+    // metric's exact NULL count, recorded from the cube's footers at build
+    // and at every refresh (RollupBuild, CubeRefresh), must be 0.
+    def nullFree(e: Expression): Boolean =
+      (e match {
+        case a: Attribute => Some(a)
+        case _ => dsumCastOf(e)
+      }).exists(a => ru.exactNullCount.exists { case (c, n) =>
+        n == 0L && c.equalsIgnoreCase(nameOf(a)) })
     def isDouble(e: Expression): Boolean = e match {
       case a: Attribute => a.dataType == DoubleType
       case _ => dsumCastOf(e).exists(_.dataType == DoubleType)
@@ -682,7 +689,7 @@ case class RollupRouting(spark: SparkSession)
         Min(rAttr(c)).toAggregateExpression())
       case Max(child) => metricOf(child, ru.maxs, allowDsumCast = false).map(c =>
         Max(rAttr(c)).toAggregateExpression())
-      case Average(child, _) if isDouble(child) =>
+      case Average(child, _) if isDouble(child) && nullFree(child) =>
         metricOf(child, ru.sums, allowDsumCast = true).map(c =>
           Divide(
             Cast(Sum(rAttr(c)).toAggregateExpression(), DoubleType),

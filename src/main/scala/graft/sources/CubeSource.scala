@@ -133,7 +133,10 @@ object CubeSource {
   }
 
   /** Materialize the flat cube (bucket-partitioned parquet + stats) and
-    * register it for plan rewriting. Idempotent per destination path.
+    * register it for plan rewriting. Idempotent per destination path, and
+    * a repeated call keeps the lattice nodes already attached to the
+    * cube's current generation: those of the registered cube when it
+    * serves that generation, else those of the generation's descriptor.
     */
   def materialize(spark: SparkSession, info: CubeInfo,
                   tablePaths: Map[String, String], destPath0: String,
@@ -142,14 +145,13 @@ object CubeSource {
     // a refreshed cube's serving dir is a `.gen-N` sibling of the build
     // root, and a re-materialize call must attach THAT, not the retained
     // previous generation at the bare root
-    val destPath = graft.cube.CubeGenerations.currentDir(destPath0)
+    val destPath = CubeGenerations.currentDir(destPath0)
     if (!new java.io.File(destPath, "_SUCCESS").exists()) {
       // listed BEFORE the sources are read, for CubeRefresh's detection
       val listing = FactListing.listFact(info, tablePaths)
       val flat = flatten(spark, info, tablePaths, schemas)
       val bucketed = flat
-        .withColumn(info.timeBucketColumn,
-          graft.cube.TpchCube.bucketExpr(info.timeColumn))
+        .withColumn(info.timeBucketColumn, TpchCube.bucketExpr(info.timeColumn))
         .repartition(col(info.timeBucketColumn))
       // declared intra-bucket clustering (CubeInfo.clusterDims); the sort
       // leads with the partition column so the writer reuses it
@@ -163,8 +165,10 @@ object CubeSource {
       BucketFooters.ensure(spark, destPath, info.timeBucketColumn, info.timeColumn)
     }
     val stats = CubeStats.ensure(spark, info, destPath)
+    val nodes = CubeCatalog.get(info.name).filter(_.cubePath == destPath)
+      .orElse(CubeMeta.load(destPath)).map(_.rollups).getOrElse(Nil)
     val cube = RegisteredCube(CubeStats.withStats(info, stats), destPath,
-      tablePaths.map { case (t, p) => t -> CubeCatalog.normalizePath(p) })
+      tablePaths.map { case (t, p) => t -> CubeCatalog.normalizePath(p) }, nodes)
     CubeCatalog.register(cube)
     CubeMeta.save(cube)
     cube

@@ -2,107 +2,33 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Dev tool: measure how the heaviest PIPELINE operators scale with data —
-  * time each at two scale factors (default sf0.01 and sf0.1, a 10× data
-  * step) and report the per-query scaling exponent
-  * `log10(t_big / t_small)`. An exponent ≈ 1 is linear-in-data (the
-  * 100 TB design claim); ≫ 1 flags a super-linear operator (quadratic
-  * candidate generation, skew collapse) that small-scale correctness
-  * gates cannot see; ≈ 0 on a serve path means the serve cost is
-  * index-bounded, not corpus-bounded. Noop-sink timing for queries (the
-  * Bench discipline — `.count()` would elide final sorts via
-  * EliminateSorts); first evaluation per (target, sf) is an untimed
-  * warmup so one-time artifact builds (pair index, span store, IVF
-  * store, trained models) don't pollute the trend.
+/** Scale replicas of a testdata directory, for measuring how operators
+  * scale with data beyond the generated scale factors: an
+  * sf1-EQUIVALENT corpus — the documents, embeddings and events tables
+  * replicated 10× with re-keyed ids and per-copy content perturbation —
+  * and, one decade up, an sf10-equivalent documents table.
   *
-  * Families covered: dedup/corpus (the round-10 set), ANN
-  * (`q_knn_join`, `q_ann_store`, and a post-ingest/post-compaction IVF
-  * store probe), event funnel/retention, and the span-store streaming
-  * ingest (timed per batch against a GROWING store — flat reps are the
-  * evidence that ingest is batch-bounded, not history-bounded).
-  *
-  * SECOND DECADE: one measured decade (sf0.01→sf0.1) bounds the
-  * sub-linearity claim loosely; the probe therefore also builds an
-  * sf1-EQUIVALENT corpus — the probed tables (documents, embeddings,
-  * events) replicated 10× from sf0.1 with re-keyed ids and per-copy
-  * content perturbation — and times every target at that third point,
-  * reporting the second-decade exponent and the per-decade exponent over
-  * the full 100× span. Perturbation is load-bearing, not cosmetic:
-  * naive byte-replication would hand every document 10 exact copies and
-  * every vector 10 identical twins, which quadratic-in-bucket candidate
-  * generation (LSH bands, shingle inverted index) would misread as a
-  * scaling pathology that fresh data at sf1 does not have. Text gets a
-  * per-copy alphabet rotation (length, line structure, token counts, and
-  * within-copy duplicate groups all preserved; every shingle differs
-  * across copies); vectors get deterministic per-(id,copy,dim) jitter
-  * (~0.8σ of the element distribution, so replicas spread across nearby
-  * LSH/IVF buckets like fresh vectors); event replicas get fresh user
-  * ids (10× independent cohorts, not 10×-longer per-user histories).
-  * Star tables are byte-copied unreplicated — no probed family touches
-  * them; they exist only so engine warmup behaves identically.
-  *
-  * Usage: runMain graft.tools.ScaleProbe [outPath] [smallDir] [bigDir] [reps]
-  * Writes one JSON object (committed per round as SCALE_PROBE_r<N>.json).
+  * Perturbation is load-bearing, not cosmetic: naive byte-replication
+  * would hand every document 10 exact copies and every vector 10
+  * identical twins, which quadratic-in-bucket candidate generation (LSH
+  * bands, shingle inverted index) would misread as a scaling pathology
+  * that fresh data at sf1 does not have. Text gets a per-copy alphabet
+  * rotation (length, line structure, token counts, and within-copy
+  * duplicate groups all preserved; every shingle differs across copies);
+  * vectors get deterministic per-(id,copy,dim) jitter (~0.8σ of the
+  * element distribution, so replicas spread across nearby LSH/IVF buckets
+  * like fresh vectors); event replicas get fresh user ids (10×
+  * independent cohorts, not 10×-longer per-user histories). Star tables
+  * are byte-copied unreplicated. Replicas live under the storage root
+  * ([[graft.Graft.targetDir]]), keyed by the source's content tag.
+  * `ScaleReplicaSpec` locks these invariants.
   */
 object ScaleProbe {
-
-  /** prepare() runs untimed setup for one (target, sf) and returns the
-    * thunk the probe times (run once more untimed as warmup, then
-    * min-of-reps).
-    */
-  private case class Target(name: String,
-                            prepare: (SparkSession, String) => (() => Unit))
-
-  private def entryTarget(name: String) = Target(name, (spark, dir) => {
-    val fn = graft.SparkEntry.queries(name)
-    () => fn(spark, dir).write.mode("overwrite").format("noop").save()
-  })
 
   private def rmRf(path: String): Unit = {
     val f = new java.io.File(path)
     if (f.exists()) org.apache.commons.io.FileUtils.deleteDirectory(f)
   }
-
-  /** IVF store serve after the full maintenance cycle (build → streamed
-    * ingest append → compaction): the timed thunk is the locked probe a
-    * production reader runs. Expect a near-flat exponent — probe cost is
-    * nprobe buckets of the store, not the corpus.
-    */
-  private val annStorePostCompact =
-    Target("ann_store_probe_postcompact", (spark, dir) => {
-      import graft.operators.Similarity
-      import org.apache.spark.sql.functions.col
-      val embs = graft.Tables.t(spark, dir, "embeddings")
-      val cents = Similarity.trainKmeansCentroids(embs, "embedding",
-        k = 16, iters = 2)
-      val q = embs.filter(col("vec_id") === 0L)
-        .select("embedding").head().getSeq[Float](0)
-      val path = "/root/repo/target/indexes/ivf_scaleprobe_" +
-        new java.io.File(dir).getName
-      rmRf(path)
-      Similarity.materializedIvfIndex(embs, "vec_id", "embedding", cents, path)
-      Similarity.ivfIngest(embs.filter(col("vec_id") < 64), "embedding",
-        cents, path)
-      Similarity.ivfCompact(spark, path)
-      () => {
-        Similarity.ivfStoreProbe(spark, path, "vec_id", "embedding", q,
-          k = 10, cents, nprobe = 2)
-        ()
-      }
-    })
-
-  /** Span-store streaming ingest: each timed rep appends one more batch's
-    * count partials to the SAME store, so the rep spread doubles as a
-    * history-independence check (cost ∝ batch, never ∝ store).
-    */
-  private val spanIngestBatch = Target("span_ingest_batch", (spark, dir) => {
-    import graft.operators.Dedup
-    val docs = graft.Tables.t(spark, dir, "documents")
-    val path = "/root/repo/target/indexes/span_scaleprobe_" +
-      new java.io.File(dir).getName
-    rmRf(path)
-    () => Dedup.spanCountsIngest(docs, "doc_id", "text", k = 8, path)
-  })
 
   /** Re-keying stride between replica copies: copy k's ids live in
     * `[k*ReplicaOff, (k+1)*ReplicaOff)`. Shared with ScaleReplicaSpec so
@@ -120,7 +46,7 @@ object ScaleProbe {
     import org.apache.spark.sql.functions._
     val tag = graft.Tables.contentTag(srcDir)
     val base = new java.io.File(srcDir).getName
-    val root = new java.io.File("/root/repo/target")
+    val root = new java.io.File(graft.Graft.targetDir)
     val dst = new java.io.File(root, s"scale_sf1x_${base}_$tag")
     // drop replicas of THIS source dir keyed to older testdata
     // generations, plus legacy replicas named by bare tag (the pre-r13
@@ -179,127 +105,6 @@ object ScaleProbe {
     dst.getPath
   }
 
-  /** 10× STAR-TABLE replica of `srcDir` — the cube route's second
-    * measured decade (r16 verdict item 4: the pipeline families have
-    * three measured decades; the cube headlines' engine-vs-raw scan
-    * ratios were measured only at sf0.1). `lineitem` and `orders` are
-    * replicated 10× with re-keyed order ids (`+ k·ReplicaOff`, so every
-    * copy's lineitems join their own orders copy and nothing collides);
-    * dimension tables copy verbatim — dimensions do not grow 10× per
-    * fact decade in a warehouse, and the headline joins stay exactly as
-    * broadcastable as they would at scale. Dates, dimension keys and
-    * measures are untouched, so every headline predicate keeps its
-    * selectivity and the routed result is the sf0.1 answer with 10×
-    * counts. Content-tagged like every replica (the cube layer builds a
-    * fresh lattice for the replica's own tag).
-    */
-  private[tools] def ensureSf1EquivalentStar(spark: SparkSession,
-                                             srcDir: String): String = {
-    import org.apache.spark.sql.functions._
-    val tag = graft.Tables.contentTag(srcDir)
-    val base = new java.io.File(srcDir).getName
-    val root = new java.io.File("/root/repo/target")
-    val dst = new java.io.File(root, s"scale_sf1x_star_${base}_$tag")
-    Option(root.listFiles()).toSeq.flatten
-      .filter { f =>
-        val n = f.getName
-        n != dst.getName && n.startsWith(s"scale_sf1x_star_${base}_")
-      }
-      .foreach(f => rmRf(f.getPath))
-    val marker = new java.io.File(dst, "_REPLICATED_OK")
-    if (marker.exists()) return dst.getPath
-    rmRf(dst.getPath); dst.mkdirs()
-    // dims verbatim; the pipeline tables too — the query harness
-    // registers every table, and this replica scales only the fact side
-    for (t <- Seq("region", "nation", "customer", "supplier", "part",
-        "documents", "embeddings", "events"))
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(srcDir, t + ".parquet"),
-        java.nio.file.Paths.get(dst.getPath, t + ".parquet"))
-    for ((t, key) <- Seq("orders" -> "o_orderkey",
-        "lineitem" -> "l_orderkey")) {
-      val b = spark.read.parquet(s"$srcDir/$t.parquet")
-      (0 until 10).map { k =>
-        if (k == 0) b
-        else b.withColumn(key, col(key) + lit(k * ReplicaOff))
-      }.reduce(_.union(_))
-        .repartition(32)
-        .write.mode("overwrite").parquet(s"${dst.getPath}/$t.parquet")
-    }
-    java.nio.file.Files.writeString(marker.toPath, s"src=$srcDir tag=$tag\n")
-    dst.getPath
-  }
-
-  /** The cube route one decade up (r16 verdict item 4): engine-vs-raw
-    * scan rows / footer column bytes and noop-sink wall for the eight
-    * BASELINE.md headline queries, at sf0.1 AND at the 10× star replica
-    * — turning the headline scan ratios into two-point lines like every
-    * pipeline family. Rows come from the task-metrics recordsRead of one
-    * untimed pass (deterministic for a fixed plan); bytes from the
-    * footer-measured, pruning-aware [[org.apache.spark.sql.graft.ScanBytes]];
-    * the raw arm re-runs the same queries under
-    * [[graft.Graft.withoutRewrites]].
-    */
-  private def cubeDecadeProbe(spark: SparkSession, bigDir: String,
-                              reps: Int): String = {
-    val headline = Seq("q02_basic_agg", "q_ship_date_range",
-      "q_subqry_filters_range", "q01_pricing_summary",
-      "q03_shipping_priority", "q05_local_supplier",
-      "q07_nation_volume", "q08_market_share")
-    val starX = ensureSf1EquivalentStar(spark, bigDir)
-    println(s"[scale] sf1-equivalent star corpus at $starX")
-    val ioRows = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null) {
-          ioRows.addAndGet(te.taskMetrics.inputMetrics.recordsRead); ()
-        }
-    }
-    def exec(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // (wall min-of-reps, recordsRead, footer column bytes) of one query
-      def measure(name: String, dir: String): (Double, Long, Long) = {
-        def df = graft.SparkEntry.queries(name)(spark, dir)
-        exec(df) // warmup: cube/lattice build, file index, codegen
-        val t = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          exec(df)
-          (System.nanoTime() - t0) / 1e9
-        }.min
-        org.apache.spark.sql.graft.ListenerBusUtil.waitUntilEmpty(spark)
-        ioRows.set(0L)
-        val frame = df
-        exec(frame)
-        org.apache.spark.sql.graft.ListenerBusUtil.waitUntilEmpty(spark)
-        val bytes =
-          try org.apache.spark.sql.graft.ScanBytes.of(frame)
-          catch { case _: Exception => -1L }
-        (t, ioRows.get(), bytes)
-      }
-      val arms = Seq("big" -> bigDir, "sf1x" -> starX).map {
-        case (label, dir) =>
-          val qs = headline.map { n =>
-            val (te, re, be) = measure(n, dir)
-            val (tr, rr, br) = graft.Graft.withoutRewrites(spark) {
-              measure(n, dir)
-            }
-            val ratio = if (re > 0) rr.toDouble / re else -1.0
-            println(f"[scale] cube $label%-5s $n%-24s engine=$te%.3f s " +
-              f"raw=$tr%.3f s rows=$re/$rr (${ratio}%.0fx) bytes=$be/$br")
-            f""" "$n":{"t_engine":$te%.3f,"t_raw":$tr%.3f,"scan_rows":[$re,$rr],"scan_bytes":[$be,$br]}"""
-          }
-          s""""$label":{"dir":"$dir","queries":{
-             |${qs.mkString(",\n")}
-             |}}""".stripMargin
-      }
-      s"""{"note":"cube-route headlines one decade up: 10x star replica (lineitem+orders re-keyed, dims verbatim); scan_rows/scan_bytes are [engine, raw] of one untimed pass; t is noop-sink min-of-$reps",
-         |${arms.mkString(",\n")}}""".stripMargin
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   /** Deterministic alphabet permutation keyed by `seed` (Fisher-Yates
     * over an LCG): the decade-3 replica's per-copy text transform.
     * Rotations alone cannot key a THIRD decade — 100 copies of copies
@@ -342,7 +147,7 @@ object ScaleProbe {
     import org.apache.spark.sql.functions._
     val tag = graft.Tables.contentTag(srcDir)
     val base = new java.io.File(srcDir).getName
-    val root = new java.io.File("/root/repo/target")
+    val root = new java.io.File(graft.Graft.targetDir)
     val dst = new java.io.File(root, s"scale_sf10x_${base}_$tag")
     // drop decade-3 replicas of THIS source keyed to older testdata
     Option(root.listFiles()).toSeq.flatten
@@ -407,693 +212,5 @@ object ScaleProbe {
     java.nio.file.Files.writeString(marker.toPath,
       s"src=$sf1xDir tag=$tag\n")
     dst.getPath
-  }
-
-  /** Skewed-bucket batch serving (r11 verdict item): one IVF bucket holds
-    * ~50% of the store and the whole query batch concentrates on it —
-    * the worst case for a bucket equi-join, whose candidate volume is
-    * Σ_b |queries probing b| × |store rows in b|. The question the probe
-    * answers: does that hot bucket become a straggler needing AQE
-    * skew-split or in-bucket salting? Measured answer (r13): the probed
-    * batch BROADCASTS, so no shuffled join partition exists for AQE to
-    * split — but the hot bucket's scan tasks (parallelism = file splits,
-    * sized by bytes with no knowledge of join fan-out) DID straggle:
-    * the guard-disabled A/B arm below serves identical candidates 6.9×
-    * slower (1.95 vs 0.28 µs per candidate) at fan-out 256. The
-    * fix is [[graft.operators.Similarity.ivfStoreTopKBatch]]'s fan-out
-    * spread guard (round-robin the pruned store when any bucket's probe
-    * fan-out ≥ `spark.graft.ivf.batchSpreadFanout`); this probe is the
-    * committed evidence that per-candidate cost under concentration
-    * stays comparable to the uniform store. The skewed store is built
-    * honestly (a dense clump of vectors collapses into one centroid's
-    * bucket — real corpora have dense regions), not by forging bucket
-    * labels.
-    */
-  private def skewedBucketProbe(spark: SparkSession, dir: String,
-                                reps: Int): String = {
-    import graft.operators.Similarity
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.DataFrame
-    val embs = graft.Tables.t(spark, dir, "embeddings")
-    val seed = embs.orderBy("vec_id").select("embedding")
-      .head().getSeq[Float](0)
-    val dim = seed.size
-    // half the corpus collapses to seed ± 0.005 jitter: one tight clump
-    val skewed = embs.withColumn("embedding",
-      when(pmod(col("vec_id"), lit(2L)) === 0,
-        zip_with(typedLit(seed), sequence(lit(0), lit(dim - 1)),
-          (x, i) => x + (pmod(xxhash64(col("vec_id"), i), lit(201L)) -
-            lit(100L)).cast("float") * lit(5e-5f)))
-        .otherwise(col("embedding")))
-    // centroid 0 = the seed itself; the rest trained on the spread half —
-    // the clump's nearest centroid is 0 by construction
-    val centsSkew = seed.map(_.toDouble).toSeq +:
-      Similarity.trainKmeansCentroids(
-        embs.filter(pmod(col("vec_id"), lit(2L)) === 1), "embedding",
-        k = 15, iters = 2)
-    val centsUni = Similarity.trainKmeansCentroids(embs, "embedding",
-      k = 16, iters = 2)
-    val base = "/root/repo/target/indexes/ivf_skewprobe_" +
-      new java.io.File(dir).getName
-    rmRf(base + "_skew"); rmRf(base + "_uni")
-    val storeSkew = Similarity.materializedIvfIndex(skewed, "vec_id",
-      "embedding", centsSkew, base + "_skew")
-    val storeUni = Similarity.materializedIvfIndex(embs, "vec_id",
-      "embedding", centsUni, base + "_uni")
-    val storeRows = storeUni.count()
-    val hotShare = storeSkew.filter(col("g_ivf_bucket") === 0).count()
-      .toDouble / storeRows
-    // both arms serve the SAME batch size (256 queries), so the
-    // per-candidate comparison amortizes identical fixed job overhead
-    val batchSkew = skewed
-      .filter(pmod(col("vec_id"), lit(2L)) === 0 && col("vec_id") < 512)
-    val batchUni = embs.filter(col("vec_id") < 256)
-    val nSkew = batchSkew.count(); val nUni = batchUni.count()
-    val nprobe = 2
-    def candidates(store: DataFrame, batch: DataFrame,
-                   cents: Seq[Seq[Double]]): Long = {
-      val bucketRows = store.groupBy("g_ivf_bucket").count().collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
-      batch.select(explode(Similarity.probedBucketsCol(
-          col("embedding"), cents, nprobe)).as("b"))
-        .groupBy("b").count().collect()
-        .map(r => r.getLong(1) * bucketRows.getOrElse(r.getInt(0), 0L)).sum
-    }
-    def timeServe(store: DataFrame, batch: DataFrame,
-                  cents: Seq[Seq[Double]]): (Double, String) = {
-      def df = Similarity.ivfStoreTopKBatch(store, "vec_id", "embedding",
-        batch, "vec_id", "embedding", k = 10, cents, nprobe)
-      df.write.mode("overwrite").format("noop").save() // warmup
-      val t = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        df.write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      }.min
-      val plan = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-        .queryExecution.executedPlan.toString
-      (t, if (plan.contains("BroadcastHashJoin")) "BroadcastHashJoin"
-          else "OTHER (inspect)")
-    }
-    val cUni = candidates(storeUni, batchUni, centsUni)
-    val cSkew = candidates(storeSkew, batchSkew, centsSkew)
-    val (tUni, joinUni) = timeServe(storeUni, batchUni, centsUni)
-    val (tSkew, joinSkew) = timeServe(storeSkew, batchSkew, centsSkew)
-    // the CALIBRATED comparison is the skewed arm against ITSELF with the
-    // spread guard disabled — identical store, batch, and candidate
-    // volume, so the ratio isolates exactly what the guard buys (a
-    // cross-arm per-candidate ratio is overhead-skewed at this corpus
-    // size: both arms are sub-second, and the uniform arm amortizes the
-    // same fixed job cost over 4× fewer candidates)
-    val guardKey = "spark.graft.ivf.batchSpreadFanout"
-    val guardPrev = spark.conf.getOption(guardKey)
-    val (tSkewUnguarded, _) =
-      try { spark.conf.set(guardKey, Int.MaxValue.toString)
-            timeServe(storeSkew, batchSkew, centsSkew) }
-      finally guardPrev match {
-        case Some(v) => spark.conf.set(guardKey, v)
-        case None => spark.conf.unset(guardKey)
-      }
-    val usUni = tUni * 1e6 / math.max(cUni, 1L)
-    val usSkew = tSkew * 1e6 / math.max(cSkew, 1L)
-    val speedup = tSkewUnguarded / tSkew
-    println(f"[scale] skewed-bucket batch: hot_share=$hotShare%.2f " +
-      f"uniform t=$tUni%.3f s cands=$cUni skew t=$tSkew%.3f s cands=$cSkew " +
-      f"unguarded t=$tSkewUnguarded%.3f s (guard speedup $speedup%.1fx) " +
-      f"join=$joinSkew")
-    val verdict =
-      if (joinSkew == "BroadcastHashJoin" && tSkew <= 0.6 * tSkewUnguarded)
-        f"fan-out spread guard rebalances: $speedup%.1fx faster than the " +
-          "same skewed serve with the guard disabled (identical " +
-          "candidates — the unguarded hot bucket's scan task straggles); " +
-          "AQE skew-split is moot (the probed batch broadcasts — no " +
-          "skewed shuffled join partition exists)"
-      else "guard buys < 1.67x on the skewed serve — revisit (spread " +
-        "threshold or in-bucket salting)"
-    f"""{"dir":"$dir","store_rows":$storeRows,"hot_bucket_share":$hotShare%.3f,"nprobe":$nprobe,"uniform":{"batch_queries":$nUni,"t":$tUni%.3f,"candidates":$cUni,"us_per_candidate":$usUni%.4f},"skewed":{"batch_queries":$nSkew,"t":$tSkew%.3f,"candidates":$cSkew,"us_per_candidate":$usSkew%.4f},"skewed_guard_disabled":{"t":$tSkewUnguarded%.3f,"guard_speedup":$speedup%.2f},"join":"$joinSkew","verdict":"$verdict"}"""
-  }
-
-  /** Shared-vocabulary `maxShingleDf` A/B (r15 verdict item 1): the one
-    * 100-TB claim that rested on reasoning instead of a committed
-    * artifact. The replica decades measure the engine's slope on data
-    * whose copies share (almost) no shingles, so the cap never engages
-    * there; REAL corpora share vocabulary — boilerplate shingles whose
-    * document frequency grows WITH the corpus, and whose per-shingle
-    * pair expansion is O(df²). The probe builds exactly that stress: a
-    * zipfian common-shingle overlay (a 42-token boilerplate paragraph
-    * appended to a fixed 5% of documents, so its ~40 internal shingles'
-    * df grows 10× per size step while the duplicate structure and the
-    * 95% body of the corpus stay the natural replica data) over three
-    * sizes 10× apart (sf0.01 → sf0.1 → sf1-equivalent), and runs the
-    * containment and ngram-Jaccard candidate machinery with the cap at
-    * the containment default (1000) vs DISABLED. Alongside wall times it
-    * reports the exact analytic candidate volume Σ_{df≥2} df(df−1)/2
-    * from the shingle-df histogram — deterministic, box-noise-free —
-    * in both arms, plus how many shingles the cap dropped. The claim
-    * under test: capped volume/time stay ~linear in documents as shared
-    * df crosses the cap, while the uncapped arm superlinearizes (the
-    * boilerplate's pair volume alone grows 100× per 10× of data). The
-    * uncapped TIMING is guarded by the volume figure (skip past 2e9
-    * candidates — the volume number, which is the claim's substance, is
-    * still reported); what the cap sacrifices for this bound is pinned
-    * by PipelineOpsSpec ("containment shingle-df cap drops
-    * boilerplate-only pairs, keeps quotes").
-    */
-  private def sharedVocabCapProbe(spark: SparkSession, smallDir: String,
-                                  bigDir: String, sf1xDir: String,
-                                  reps: Int): String = {
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.functions._
-    val boiler = (1 to 42).map(i => s"boilerseg$i").mkString(" ")
-    val overlayMod = 20L // 5% of docs carry the boilerplate
-    def overlaid(dir: String): DataFrame =
-      graft.Tables.t(spark, dir, "documents").select(col("doc_id"),
-        when(pmod(xxhash64(col("doc_id")), lit(overlayMod)) === 0,
-          concat(col("text"), lit(" " + boiler)))
-          .otherwise(col("text")).as("text"))
-    val cap = 1000 // the containment path's load-bearing default
-    // exact candidate volume from the shingle-df histogram:
-    // (uncapped pairs, capped pairs, shingles the cap drops)
-    def volumes(df: DataFrame): (Long, Long, Long) = {
-      val r = df.select(explode(org.apache.spark.sql.graft.NativeTextExprs
-          .shingleHashSet(graft.functions.TextFunctions
-            .tokens(col("text")), 3)).as("g_sh"))
-        .groupBy("g_sh").agg(count(lit(1)).as("df"))
-        .filter(col("df") >= 2)
-        // SQL `/` is fractional — cast back (df(df−1) is even, exact)
-        .select(col("df"),
-          (col("df") * (col("df") - 1) / 2).cast("long").as("pairs"))
-        // coalesce: a degenerate corpus where NO shingle reaches df >= 2
-        // leaves the sums NULL — report zero volume, not an NPE (r16
-        // ADVICE)
-        .agg(coalesce(sum(col("pairs")), lit(0L)),
-          coalesce(sum(when(col("df") <= cap, col("pairs")).otherwise(0L)),
-            lit(0L)),
-          count(when(col("df") > cap, lit(1)))).head()
-      (r.getLong(0), r.getLong(1), r.getLong(2))
-    }
-    def timeArm(df: DataFrame, op: String, capped: Boolean): Double = {
-      def frame = op match {
-        case "containment" => graft.operators.Dedup.ngramContainmentPairs(
-          df, "doc_id", "text", threshold = 0.8,
-          maxShingleDf = if (capped) Some(cap) else None)
-        case _ => graft.operators.Dedup.ngramJaccardDupPairs(
-          df, "doc_id", "text", threshold = 0.8,
-          maxShingleDf = if (capped) Some(cap) else None)
-      }
-      def run(): Unit =
-        frame.write.mode("overwrite").format("noop").save()
-      run() // warmup
-      (1 to reps).map { _ =>
-        val t0 = System.nanoTime(); run(); (System.nanoTime() - t0) / 1e9
-      }.min
-    }
-    val sizes = Seq("s1" -> smallDir, "s2" -> bigDir, "s3" -> sf1xDir)
-    val rows = sizes.map { case (tag, dir) =>
-      val df = overlaid(dir)
-      val docs = df.count()
-      val overlayDf = df.filter(
-        pmod(xxhash64(col("doc_id")), lit(overlayMod)) === 0).count()
-      val (volUnc, volCap, dropped) = volumes(df)
-      val uncTimeable = volUnc <= 2000000000L
-      val arms = Seq("containment", "ngram").map { op =>
-        val tCap = timeArm(df, op, capped = true)
-        val tUnc = if (uncTimeable) timeArm(df, op, capped = false) else -1.0
-        println(f"[scale] shared-vocab $tag%-3s $op%-12s docs=$docs " +
-          f"boiler_df=$overlayDf cap_t=$tCap%.3f unc_t=$tUnc%.3f " +
-          f"vol_cap=$volCap vol_unc=$volUnc dropped_shingles=$dropped")
-        f""""$op":{"t_capped":$tCap%.3f,"t_uncapped":${if (uncTimeable) f"$tUnc%.3f" else "null"}}"""
-      }
-      (tag, docs, overlayDf, volUnc, volCap, dropped,
-        s"""{"dir":"$dir","docs":$docs,"boilerplate_df":$overlayDf,"candidates_uncapped":$volUnc,"candidates_capped":$volCap,"shingles_over_cap":$dropped,${arms.mkString(",")}}""")
-    }
-    def slope(a: Double, b: Double): String =
-      if (a > 0 && b > 0) f"${math.log10(b / a)}%.2f" else "null"
-    // decade slopes on the deterministic volumes (the claim's substance)
-    val vu = rows.map(_._4.toDouble); val vc = rows.map(_._5.toDouble)
-    val exps = s""""volume_exponents":{"uncapped_d1":${slope(vu(0), vu(1))},"uncapped_d2":${slope(vu(1), vu(2))},"capped_d1":${slope(vc(0), vc(1))},"capped_d2":${slope(vc(1), vc(2))}}"""
-    s"""{"overlay":"42-token boilerplate appended to 5% of documents (zipfian head; its ~40 internal shingles' df grows 10x per step)","cap":$cap,$exps,"sizes":{${rows.map(r => s""""${r._1}":${r._7}""").mkString(",")}}}"""
-  }
-
-  private val targets = Seq(
-    // dedup / corpus (round-10 set)
-    entryTarget("q_pack_bpe"), entryTarget("q_span_dedup"),
-    entryTarget("q_dedup_containment"), entryTarget("q_line_dedup"),
-    entryTarget("q_decontaminate"), entryTarget("q_dedup_ngram"),
-    // ANN
-    entryTarget("q_knn_join"), entryTarget("q_ann_store"),
-    entryTarget("q_ann_store_batch"), annStorePostCompact,
-    // events
-    entryTarget("q_events_funnel"), entryTarget("q_events_retention"),
-    // streaming span ingest
-    spanIngestBatch)
-
-  /** The unit each family's cost should be NORMALIZED by when
-    * adjudicating an exponent (r13 verdict): the replica grows documents,
-    * vectors and distinct users each exactly 10× per decade, so a family
-    * whose per-UNIT cost is flat or falling is linear-in-data even when
-    * a fixed scheduler floor makes the raw decade-1 exponent look near
-    * zero and the decade-2 one look like growth. Events normalize by
-    * DISTINCT USERS — the funnel/retention state and join keys are
-    * per-user, so this is the direct answer to "is anything super-linear
-    * in the k−1 join chain": if cost-per-user does not rise with 10×
-    * more users, the growth is the user population itself.
-    */
-  private val unitOf: Map[String, String] = Map(
-    "q_knn_join" -> "vectors", "q_ann_store" -> "vectors",
-    "q_ann_store_batch" -> "vectors",
-    "ann_store_probe_postcompact" -> "vectors",
-    "q_events_funnel" -> "users", "q_events_retention" -> "users"
-  ).withDefaultValue("documents")
-
-  private val unitCache =
-    scala.collection.mutable.Map.empty[(String, String), Long]
-  private def unitsAt(spark: SparkSession, dir: String, unit: String): Long =
-    unitCache.getOrElseUpdate((dir, unit), unit match {
-      case "vectors" => graft.Tables.t(spark, dir, "embeddings").count()
-      case "users" => graft.Tables.events(spark, dir)
-        .select("user_id").distinct().count()
-      case _ => graft.Tables.t(spark, dir, "documents").count()
-    })
-
-  /** Fixed per-action cost of this box's scheduler/sink path (job
-    * submission, 32-task scheduling, noop commit), measured on a
-    * data-free 32-partition range. Decade-1 timings sit just a few
-    * multiples above this floor, which COMPRESSES decade-1 exponents;
-    * subtracting it (when both points clear the floor by ≥ 50 ms) gives
-    * the floor-corrected exponents reported alongside the raw ones.
-    */
-  private def measureFloor(spark: SparkSession, reps: Int): Double = {
-    def run(): Unit = spark.range(32).repartition(32)
-      .write.mode("overwrite").format("noop").save()
-    run()
-    (1 to reps).map { _ =>
-      val t0 = System.nanoTime(); run(); (System.nanoTime() - t0) / 1e9
-    }.min
-  }
-
-  private def flooredExp(tLo: Double, tHi: Double, floor: Double): Option[Double] = {
-    val (a, b) = (tLo - floor, tHi - floor)
-    if (a >= 0.05 && b >= 0.05) Some(math.log10(b / a)) else None
-  }
-
-  /** Streaming funnel/retention twins at the second decade (r13 verdict
-    * item 5): the batch probes above time the BATCH operators on the
-    * replica; this times `funnelStream`/`retentionStream` over the same
-    * events at sf0.1 and the sf1-equivalent, committing state-store rows
-    * and bytes plus throughput at both scales. The replica grows
-    * DISTINCT USERS 10× (fresh cohorts, not longer histories), so the
-    * claim under test — state scales with the user population, per-user
-    * state and per-row cost stay flat — gets a measured point at 10×
-    * users. One micro-batch per run (all files in one trigger): the
-    * retention stream's cross-batch order contract is then vacuous and
-    * both twins equal their batch operators, so the timing is of the
-    * real stateful path, not of a lucky file order.
-    */
-  private def streamingEventsProbe(spark: SparkSession, bigDir: String,
-                                   sf1xDir: String, reps: Int): String = {
-    import graft.streaming.EventPipeline
-    val steps = Seq("view", "click", "purchase")
-    def runAt(dir: String): String = {
-      // the streaming file source monitors a DIRECTORY; the driver
-      // testdata ships events.parquet as a single file (the replica
-      // writes a directory) — expose a file through a symlinked temp dir
-      val srcFile = new java.io.File(s"$dir/events.parquet")
-      val src =
-        if (srcFile.isDirectory) srcFile.getPath
-        else {
-          val d = java.nio.file.Files.createTempDirectory("graft_stream_src")
-          java.nio.file.Files.createSymbolicLink(
-            d.resolve("events.parquet"), srcFile.toPath.toAbsolutePath)
-          d.toString
-        }
-      val batch = spark.read.parquet(src)
-      val rows = batch.count()
-      val users = unitsAt(spark, dir, "users")
-      def events = {
-        val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        import classic.implicits._
-        import org.apache.spark.sql.functions.col
-        // stream schema = whatever the files actually carry (driver
-        // generations have shipped ts as nanos/raw int64/NTZ — see
-        // Tables.events), adapted by the shared projection with the
-        // epoch sniff run on the batch frame
-        graft.Tables.adaptEventsTs(
-            spark.readStream.schema(batch.schema).parquet(src), batch)
-          .select(col("event_id").cast("long"), col("ts"),
-            col("user_id").cast("long"), col("event_type"),
-            col("value").cast("double"))
-          .as[EventPipeline.Event]
-      }
-      def timed(mk: => org.apache.spark.sql.DataFrame,
-                mode: String): (Double, Long, Long, Long) = {
-        // min-of-reps, each rep a fresh query over a fresh checkpoint (a
-        // resumed checkpoint would replay nothing and time an empty batch)
-        var best = (Double.MaxValue, 0L, 0L, 0L)
-        for (_ <- 1 to reps) {
-          val ckpt = java.nio.file.Files
-            .createTempDirectory("graft_scaleprobe_ckpt").toString
-          val q = mk.writeStream.format("noop").outputMode(mode)
-            .option("checkpointLocation", ckpt).start()
-          val t0 = System.nanoTime()
-          q.processAllAvailable()
-          val t = (System.nanoTime() - t0) / 1e9
-          val progs = q.recentProgress
-          val in = progs.map(_.numInputRows).sum
-          val st = progs.flatMap(_.stateOperators).lastOption
-          q.stop()
-          org.apache.commons.io.FileUtils
-            .deleteDirectory(new java.io.File(ckpt))
-          if (t < best._1)
-            best = (t, in, st.map(_.numRowsTotal).getOrElse(0L),
-              st.map(_.memoryUsedBytes).getOrElse(0L))
-        }
-        best
-      }
-      val (tF, inF, stRowsF, stBytesF) =
-        timed(EventPipeline.funnelStream(events, steps), "update")
-      val (tR, inR, stRowsR, stBytesR) =
-        timed(EventPipeline.retentionStream(events), "append")
-      require(inF == rows && inR == rows,
-        s"stream consumed $inF/$inR of $rows rows at $dir")
-      def arm(t: Double, stRows: Long, stBytes: Long): String =
-        f"""{"t":$t%.3f,"rows_per_sec":${(rows / t).toLong},"state_rows":$stRows,"state_bytes":$stBytes,"state_bytes_per_user":${if (users > 0) stBytes / users else 0}}"""
-      f"""{"rows":$rows,"distinct_users":$users,"funnel":${arm(tF, stRowsF, stBytesF)},"retention":${arm(tR, stRowsR, stBytesR)}}"""
-    }
-    val big = runAt(bigDir)
-    val sf1x = runAt(sf1xDir)
-    s"""{"big":$big,"sf1x":$sf1x}"""
-  }
-
-  /** Migration decade probe (r18): `ArtifactStore.migrate` is ONE
-    * distributed rewrite of the store through the destination protocol's
-    * own verbs (posix source → file:/// manifest destination here, the
-    * Hadoop-binding deployment move) — its cost must be LINEAR in store
-    * rows with flat per-row cost across decades, or a 100-TB relocation
-    * would be the estate's bottleneck. Measures wall per decade over a
-    * freshly built posix IVF store at each dir; the destination is
-    * discarded between reps (a migration never overwrites).
-    */
-  /** The generation-swap refresh at two scales a decade apart (r19): a
-    * scratch cube per scale, then ONE dirty bucket refreshed through
-    * [[graft.cube.CubeRefresh]]. Claims measured, per arm:
-    *   - refresh wall << full-build wall (refresh pays for the dirty
-    *     slice + lattice upkeep, not history);
-    *   - rewritten bytes (dirty bucket dirs of the new generation) are
-    *     ~1/buckets of the cube, carried bytes land by HARD LINK — every
-    *     carried file's nlink >= 2, zero bytes copied — so the carry is
-    *     metadata-only however big history grows.
-    */
-  private def refreshGenerationsProbe(spark: SparkSession,
-                                      dirs: Seq[(String, String)],
-                                      reps: Int): String = {
-    import graft.cube.{CubeCatalog, CubeGenerations, CubeRefresh}
-    val arms = dirs.map { case (label, dir) =>
-      val tag = graft.Tables.contentTag(dir)
-      val root = s"/root/repo/target/cubes/refresh_probe_${label}_$tag"
-      CubeGenerations.wipeAll(root)
-      val info = graft.cube.TpchCube.info.copy(name = s"refresh_probe_$label")
-      val tablePaths = graft.cube.TpchCube.roleOfTable.keys.map(t =>
-        t -> CubeCatalog.normalizePath(graft.Tables.path(dir, t))).toMap
-      val tBuild0 = System.nanoTime()
-      val cube = graft.sources.CubeSource.materialize(spark, info,
-        tablePaths, root)
-      val tBuild = (System.nanoTime() - tBuild0) / 1e9
-      val buckets = spark.read.parquet(cube.cubePath)
-        .select(info.timeBucketColumn).distinct().count()
-      def du(f: java.io.File): Long =
-        if (f.isFile) f.length()
-        else Option(f.listFiles()).toSeq.flatten.map(du).sum
-      val totalBytes = du(new java.io.File(cube.cubePath))
-      val dirtyBucket = spark.read.parquet(cube.cubePath)
-        .groupBy(org.apache.spark.sql.functions.col(info.timeBucketColumn))
-        .count().orderBy(org.apache.spark.sql.functions
-          .desc("count")).head().getInt(0)
-      val flatFn = graft.sources.CubeSource.flatten(spark, info, tablePaths)
-      val tRefresh = (1 to math.min(reps, 2)).map { _ =>
-        val c = CubeCatalog.get(info.name).get
-        val t0 = System.nanoTime()
-        CubeRefresh.refresh(spark, c, flatFn,
-          explicitDirty = Some(Seq(dirtyBucket)))
-        (System.nanoTime() - t0) / 1e9
-      }.min
-      val gen = CubeCatalog.get(info.name).get.cubePath
-      val dirtyDir = new java.io.File(gen,
-        s"${info.timeBucketColumn}=$dirtyBucket")
-      val rewrittenBytes = du(dirtyDir)
-      var carriedFiles = 0L
-      var carriedBytes = 0L
-      var linkedFiles = 0L
-      Option(new java.io.File(gen).listFiles()).toSeq.flatten
-        .filter(f => f.isDirectory &&
-          f.getName.startsWith(info.timeBucketColumn + "=") &&
-          f.getName != dirtyDir.getName)
-        .foreach { d =>
-          Option(d.listFiles()).toSeq.flatten.filter(_.isFile).foreach { f =>
-            carriedFiles += 1
-            carriedBytes += f.length()
-            val n = java.nio.file.Files
-              .getAttribute(f.toPath, "unix:nlink")
-              .asInstanceOf[Number].intValue()
-            if (n >= 2) linkedFiles += 1
-          }
-        }
-      println(f"[scale] refresh $label%-6s build=$tBuild%.2f s " +
-        f"refresh(1 bucket)=$tRefresh%.2f s buckets=$buckets " +
-        f"rewritten=${rewrittenBytes / 1024}%d KiB carried=" +
-        f"${carriedBytes / 1024}%d KiB linked=$linkedFiles/$carriedFiles")
-      CubeCatalog.unregister(info.name)
-      (label, tBuild, tRefresh, buckets, totalBytes, rewrittenBytes,
-        carriedFiles, carriedBytes, linkedFiles)
-    }
-    val armJs = arms.map { case (l, b, r, k, tb, rb, cf, cb, lf) =>
-      f""""$l":{"t_build":$b%.3f,"t_refresh_1bucket":$r%.3f,"buckets":$k,"total_bytes":$tb,"rewritten_bytes":$rb,"carried_files":$cf,"carried_bytes":$cb,"carried_hardlinked":$lf}"""
-    }
-    val pairs = arms.zip(arms.tail).map {
-      case ((_, _, r0, _, _, _, _, _, _), (l1, _, r1, _, _, _, _, _, _)) =>
-        f""""refresh_exponent_to_$l1":${math.log10(r1 / r0)}%.2f"""
-    }
-    (armJs ++ pairs).mkString("{", ",", "}")
-  }
-
-  private def migrateDecadesProbe(spark: SparkSession, dirs: Seq[(String, String)],
-                                  reps: Int): String = {
-    import graft.operators.{ArtifactStore, Dedup}
-    val arms = dirs.map { case (label, dir) =>
-      // span-count store over documents: the largest artifact family by
-      // row count (one row per distinct k-gram span), so the decades
-      // measure the REWRITE, not the per-migration fixed floor the tiny
-      // embeddings store sits on
-      val docs = graft.Tables.t(spark, dir, "documents")
-      val tag = graft.Tables.contentTag(dir)
-      val src = s"/root/repo/target/indexes/migrate_probe_src_${label}_$tag"
-      for (sfx <- Seq("", ".tombstones", ".schema.json", ".artifact.json"))
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(src + sfx))
-      Dedup.spanCountsIngest(docs, "doc_id", "text", 8, src)
-      val rows = spark.read.parquet(src).count()
-      val t = (1 to reps).map { i =>
-        val dst = src.replace("_src_", s"_dst${i}_")
-        rmRf(dst)
-        val t0 = System.nanoTime()
-        ArtifactStore.migrate(spark, src, "file://" + dst)
-        val dt = (System.nanoTime() - t0) / 1e9
-        rmRf(dst)
-        dt
-      }.min
-      println(f"[scale] migrate $label%-10s rows=$rows%8d t=$t%.3f s")
-      (label, rows, t)
-    }
-    val pairs = arms.zip(arms.tail).map { case ((_, r0, t0), (l1, r1, t1)) =>
-      val e = math.log10(t1 / t0)
-      val perRow = math.log10((t1 / r1) / (t0 / r0))
-      println(f"[scale] migrate decade to $l1%-8s exponent=$e%.2f per-row=$perRow%.2f")
-      f""""to_$l1":{"exponent":$e%.2f,"per_row_exponent":$perRow%.2f}"""
-    }
-    val armJs = arms.map { case (l, r, t) =>
-      f""""$l":{"rows":$r,"t_migrate":$t%.3f}"""
-    }
-    (armJs ++ pairs).mkString("{", ",", "}")
-  }
-
-  def main(args: Array[String]): Unit = {
-    val outPath = if (args.length > 0) args(0) else "SCALE_PROBE_LATEST.json"
-    val small = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val big = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-    val reps = if (args.length > 3) args(3).toInt else 3
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        graft.Graft.shuffleWriterThreshold)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", graft.Graft.sparkLocalDir) // not /tmp (sweeper)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Graft.install(spark)
-
-    if (outPath == "--replicate-only") { // build the replica corpora and exit
-      val sf1 = ensureSf1Equivalent(spark, big)
-      println(s"[scale] sf1-equivalent corpus at $sf1")
-      println(s"[scale] sf10-equivalent documents corpus at ${
-        ensureSf10Equivalent(spark, big, sf1)}")
-      spark.stop(); return
-    }
-    if (outPath == "--stream-smoke") { // exercise the streaming twins fast
-      println(s"[scale] stream smoke: ${streamingEventsProbe(spark, small, small, 1)}")
-      spark.stop(); return
-    }
-    if (outPath == "--shared-vocab") { // just the cap A/B, for iteration
-      val sf1 = ensureSf1Equivalent(spark, big)
-      println(s"[scale] shared-vocab cap A/B: ${
-        sharedVocabCapProbe(spark, small, big, sf1, reps)}")
-      spark.stop(); return
-    }
-    if (outPath == "--cube-decade") { // just the cube-route decade probe
-      println(s"[scale] cube decade 2: ${cubeDecadeProbe(spark, big, reps)}")
-      spark.stop(); return
-    }
-    if (outPath == "--refresh") { // just the generation-swap refresh probe
-      println(s"[scale] refresh generations: ${refreshGenerationsProbe(spark,
-        Seq("small" -> small, "big" -> big), reps)}")
-      spark.stop(); return
-    }
-    if (outPath == "--migrate") { // just the migration decade probe
-      val sf1x = ensureSf1Equivalent(spark, big)
-      println(s"[scale] migrate decades: ${migrateDecadesProbe(spark,
-        Seq("small" -> small, "big" -> big, "sf1x" -> sf1x), reps)}")
-      spark.stop(); return
-    }
-
-    def timeAt(t: Target, dir: String): Double = {
-      val run = t.prepare(spark, dir)
-      run() // warmup: artifact builds, file-index caches, codegen
-      (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        run()
-        (System.nanoTime() - t0) / 1e9
-      }.min
-    }
-
-    val floor = measureFloor(spark, reps)
-    println(f"[scale] scheduler floor (32-task noop action): $floor%.3f s")
-
-    val timings = targets.map { t =>
-      val tS = timeAt(t, small)
-      val tB = timeAt(t, big)
-      val exp = math.log10(tB / tS)
-      println(f"[scale] ${t.name}%-28s small=$tS%.3f s big=$tB%.3f s exponent=$exp%.2f")
-      (t, tS, tB)
-    }
-    def optJs(o: Option[Double]): String =
-      o.map(v => f"$v%.2f").getOrElse("null")
-    val rows = timings.map { case (t, tS, tB) =>
-      f""" "${t.name}":{"t_small":$tS%.3f,"t_big":$tB%.3f,"exponent":${math.log10(tB / tS)}%.2f,"exponent_floored":${optJs(flooredExp(tS, tB, floor))}}"""
-    }
-    // second decade: sf0.1 → sf1-equivalent (10× replicated, perturbed),
-    // plus the per-decade exponent over the full 100× span. The
-    // CLAIM-BEARING figure per family is exponent_decade2 (decade 1 sits
-    // near the scheduler floor, which compresses its exponent — the
-    // floored variants quantify by how much), and the per-UNIT exponent
-    // adjudicates WHY a decade-2 exponent rose: the replica grows each
-    // family's unit (documents / vectors / distinct users) exactly 10×,
-    // so per_unit_exponent_decade2 = exponent_decade2 − 1; ≤ 0 means
-    // cost per document/vector/user did not rise — linear-in-data with a
-    // falling constant, nothing super-linear hiding in the plan.
-    val sf1x = ensureSf1Equivalent(spark, big)
-    println(s"[scale] sf1-equivalent corpus at $sf1x")
-    val sf1xTimes = scala.collection.mutable.Map.empty[String, Double]
-    val rows2 = timings.map { case (t, tS, tB) =>
-      val tX = timeAt(t, sf1x)
-      sf1xTimes(t.name) = tX
-      val e2 = math.log10(tX / tB)
-      val e100 = math.log10(tX / tS) / 2.0
-      val unit = unitOf(t.name)
-      val (uB, uX) = (unitsAt(spark, big, unit), unitsAt(spark, sf1x, unit))
-      val ePerUnit = math.log10((tX / uX) / (tB / uB))
-      println(f"[scale] ${t.name}%-28s sf1x=$tX%.3f s decade2=$e2%.2f per-decade(100x)=$e100%.2f per-$unit%s=$ePerUnit%.2f")
-      f""" "${t.name}":{"t_sf1x":$tX%.3f,"exponent_decade2":$e2%.2f,"exponent_per_decade_100x":$e100%.2f,"exponent_decade2_floored":${optJs(flooredExp(tB, tX, floor))},"unit":"$unit","units_big":$uB,"units_sf1x":$uX,"per_unit_exponent_decade2":$ePerUnit%.2f}"""
-    }
-    // a failure in a late section must not discard the whole run's
-    // measurements — degrade that section to an error record instead
-    def section(name: String)(f: => String): String =
-      try f catch {
-        case t: Throwable =>
-          println(s"[scale] $name FAILED: $t")
-          // control characters (Spark exception messages are multi-line)
-          // would make the WHOLE probe artifact unparseable JSON; truncate
-          // the RAW message first — taking 300 chars AFTER escaping could
-          // split an escape pair and leave a lone trailing backslash that
-          // escapes the closing quote (r16 ADVICE)
-          s"""{"error":"${t.toString.take(300).replace("\\", "\\\\")
-            .replace("\"", "\\\"").replaceAll("[\\u0000-\\u001f]", " ")}"}"""
-      }
-    // THIRD decade, rising-trio only (r14 verdict item 2): decontaminate,
-    // containment and ngram were the one family whose decade-2 exponent
-    // ROSE (0.41–0.44, still sublinear, per-unit falling); the verdict's
-    // discipline is that the next decade be MEASURED, not extrapolated.
-    // The flat/falling families (vectors, events) are not re-probed.
-    val trio = Seq("q_decontaminate", "q_dedup_containment", "q_dedup_ngram")
-    val decade3Json = section("rising-trio decade 3") {
-      val sf10x = ensureSf10Equivalent(spark, big, sf1x)
-      println(s"[scale] sf10-equivalent documents corpus at $sf10x")
-      val rows3 = trio.map { name =>
-        val tY = timeAt(entryTarget(name), sf10x)
-        val tX = sf1xTimes(name)
-        val tS = timings.find(_._1.name == name).get._2
-        val e3 = math.log10(tY / tX)
-        val e1000 = math.log10(tY / tS) / 3.0
-        val (uX, uY) = (unitsAt(spark, sf1x, "documents"),
-          unitsAt(spark, sf10x, "documents"))
-        val ePerUnit = math.log10((tY / uY) / (tX / uX))
-        println(f"[scale] ${name}%-28s sf10x=$tY%.3f s decade3=$e3%.2f " +
-          f"per-decade(1000x)=$e1000%.2f per-documents=$ePerUnit%.2f")
-        f""" "$name":{"t_sf10x":$tY%.3f,"exponent_decade3":$e3%.2f,"exponent_per_decade_1000x":$e1000%.2f,"exponent_decade3_floored":${optJs(flooredExp(tX, tY, floor))},"unit":"documents","units_sf1x":$uX,"units_sf10x":$uY,"per_unit_exponent_decade3":$ePerUnit%.2f}"""
-      }
-      s"""{"dir":"$sf10x","note":"documents-only 10x replica of the sf1-equivalent (100x sf0.1, 500k documents; per-copy keyed alphabet substitution, 100 composite transforms verified pairwise distinct) for the one family whose decade-2 exponent rose; flat/falling families (vectors, events) are not re-probed","queries":{
-         |${rows3.mkString(",\n")}
-         |}}""".stripMargin
-    }
-    val streamJson = section("streaming twins")(
-      streamingEventsProbe(spark, big, sf1x, reps))
-    println(s"[scale] streaming twins: $streamJson")
-    val skewJson = section("skewed-bucket batch")(
-      skewedBucketProbe(spark, sf1x, reps))
-    val cubeDecadeJson = section("cube decade 2")(
-      cubeDecadeProbe(spark, big, reps))
-    val migrateJson = section("migrate decades")(
-      migrateDecadesProbe(spark,
-        Seq("small" -> small, "big" -> big, "sf1x" -> sf1x), reps))
-    val refreshJson = section("refresh generations")(
-      refreshGenerationsProbe(spark,
-        Seq("small" -> small, "big" -> big), reps))
-    // the shared-vocab uncapped truth arm runs LAST: it holds ~40
-    // posting-list rows of ~3M pair structs each in flight, and an
-    // executor OOM there kills the whole local[32] context — ordered
-    // last (r17: it took cube_decade2 down with it), a blowup degrades
-    // only its own section to an error record. Drop the run's
-    // accumulated cache and garbage first (r16: it ran green standalone
-    // and OOM'd only at end-of-run heap pressure).
-    spark.catalog.clearCache()
-    System.gc(); Thread.sleep(300); System.gc()
-    val sharedVocabJson = section("shared-vocab cap A/B")(
-      sharedVocabCapProbe(spark, small, big, sf1x, reps))
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath),
-      s"""{"small":"$small","big":"$big","data_factor":10,"reps":$reps,"timing":"noop-sink min-of-$reps after warmup","scheduler_floor_sec":$floor,"queries":{
-         |${rows.mkString(",\n")}
-         |},
-         |"data_factor_100":{"dir":"$sf1x","note":"probed tables replicated 10x from sf0.1 with re-keyed ids + per-copy perturbation (alphabet rotation / vector jitter / fresh cohorts); star tables copied unreplicated; exponent_decade2 is the claim-bearing figure (decade 1 sits near the scheduler floor); per_unit_exponent_decade2 <= 0 means cost per document/vector/user fell","queries":{
-         |${rows2.mkString(",\n")}
-         |}},
-         |"data_factor_1000":$decade3Json,
-         |"streaming_events_decade2":$streamJson,
-         |"skewed_bucket_batch":$skewJson,
-         |"shared_vocab_cap":$sharedVocabJson,
-         |"cube_decade2":$cubeDecadeJson,
-         |"migrate_decades":$migrateJson,
-         |"refresh_generations":$refreshJson}
-         |""".stripMargin)
-    println(s"[scale] wrote $outPath")
-    spark.stop()
   }
 }

@@ -324,6 +324,34 @@ class CubeRefreshSpec extends AnyFunSuite {
     CubeCatalog.unregister("refresh_stale_frame")
   }
 
+  test("a day-grain node built by RollupBuild answers like raw Spark after an append refresh") {
+    val (_, _, held) = seedAppendDir()
+    val name = "refresh_day_node"
+    val info = TpchCube.info.copy(name = name)
+    CubeSource.materialize(spark, info, tablePaths, s"$appendCubes/day_flat")
+    val dayNode = RollupCube.q1Meta(appendDir).copy(path = s"$appendCubes/day_q1")
+    RollupBuild.materialize(spark, name, dayNode)
+    held.coalesce(1).write.mode("append").parquet(Tables.path(appendDir, "lineitem"))
+    Tables.invalidateCache()
+    val result = CubeRefresh.refresh(spark, CubeCatalog.get(name).get,
+      CubeSource.flatten(spark, info, tablePaths))
+    assert(result.incremental && result.dirtyBuckets.nonEmpty)
+
+    // a day-aligned, month-unaligned interval: only the day node serves it
+    def q1(df: DataFrame) = df
+      .filter(col("l_shipdate") >= lit("1995-03-15").cast("timestamp"))
+      .groupBy("l_returnflag", "l_linestatus")
+      .agg(count(lit(1)).as("cnt"), Tables.dsum(col("l_quantity")).as("q"),
+        Tables.dsum(col("l_extendedprice")).as("p"))
+    val served = q1(spark.read.parquet(result.refreshed.cubePath))
+    assert(scannedRoots(served).exists(_.startsWith(s"$appendCubes/day_q1")),
+      scannedRoots(served).toString)
+    val raw = Graft.withoutRewrites(spark)(
+      q1(spark.read.parquet(Tables.path(appendDir, "lineitem"))).collect().map(_.toSeq).toSet)
+    assert(served.collect().map(_.toSeq).toSet == raw)
+    CubeCatalog.unregister(name)
+  }
+
   /** Root paths of the file scans in `df`'s optimized plan. */
   private def scannedRoots(df: DataFrame): Seq[String] =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.optimizedPlan

@@ -158,10 +158,13 @@ class RollupBuildSpec extends AnyFunSuite {
     if (!new java.io.File(src, "_SUCCESS").exists())
       Tables.events(spark, sf).drop("props")
         .write.mode("overwrite").parquet(src)
+    // a cube of its own: the first test's node stays attached to $base/cube
+    // (re-materializing a cube keeps its nodes), and it would serve this
+    // workload just as well
     val cube = CubeSource.materialize(spark, cubeInfo, Map("events" -> src),
-      s"$base/cube")
+      s"$base/cube_advised")
     try {
-      spark.read.parquet(s"$base/cube").createOrReplaceTempView("ev_rb")
+      spark.read.parquet(s"$base/cube_advised").createOrReplaceTempView("ev_rb")
       val workload = Seq(
         "SELECT event_type, count(*) AS cnt FROM ev_rb GROUP BY 1",
         "SELECT event_type, count(DISTINCT user_id) AS users FROM ev_rb GROUP BY 1")
@@ -177,7 +180,7 @@ class RollupBuildSpec extends AnyFunSuite {
       assert(ru.kmvExactNdv.contains("user_id"))
 
       // the workload's distinct-count query now routes to the built node
-      val q = spark.read.parquet(s"$base/cube")
+      val q = spark.read.parquet(s"$base/cube_advised")
         .groupBy("event_type")
         .agg(count_distinct(col("user_id")).as("users"))
       val classic = q.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
@@ -193,7 +196,7 @@ class RollupBuildSpec extends AnyFunSuite {
       assert(scansNode, "advised node should serve the advising workload")
       val routed = q.collect().map(_.toString).sorted.toSeq
       val vanilla = Graft.withoutRewrites(spark) {
-        spark.read.parquet(s"$base/cube")
+        spark.read.parquet(s"$base/cube_advised")
           .groupBy("event_type")
           .agg(count_distinct(col("user_id")).as("users"))
           .collect().map(_.toString).sorted.toSeq
