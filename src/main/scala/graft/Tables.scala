@@ -28,39 +28,50 @@ object Tables {
     * driver REGENERATES testdata between rounds and has changed its
     * generator before (round 6 shipped a different events encoding); an
     * artifact built from last round's bytes must not serve this round's
-    * queries. Evidence hashed per file: name, size, and the first + last
-    * 8 KiB of bytes — the tail of a parquet file is its footer (row
-    * counts, column min/max stats, schema), so a regeneration whose bytes
-    * change but whose file sizes happen to coincide still re-keys, while a
-    * byte-identical regeneration — the common case — reuses the artifact.
-    * Deliberately NOT mtime (re-copies would spuriously re-key) and NOT a
-    * full-content hash (this must stay cheap: a few stat+16 KiB reads, no
-    * Spark job). Memoized per dir.
+    * queries. Evidence hashed per data file of the dir's recursive listing
+    * (the walker of the star listings, [[graft.cube.StarListing.dataFiles]],
+    * so a Spark-written table directory counts by its part files): relative
+    * path, size, and the first + last 8 KiB of bytes — the tail of a parquet
+    * file is its footer (row counts, column min/max stats, schema), so a
+    * regeneration whose bytes change but whose file sizes happen to
+    * coincide still re-keys, while a byte-identical regeneration — the
+    * common case — reuses the artifact. Deliberately NOT mtime in the hash
+    * (re-copies would spuriously re-key) and NOT a full-content hash (this
+    * must stay cheap: a stat walk and 16 KiB reads, no Spark job). Memoized
+    * per dir and re-hashed whenever the listing (paths, sizes, mtimes)
+    * changes, so an append or a different star at the same path re-keys.
     */
-  private val tagMemo = scala.collection.concurrent.TrieMap.empty[String, String]
-  def contentTag(sfDir: String): String = tagMemo.getOrElseUpdate(sfDir, {
-    val files = Option(new java.io.File(sfDir).listFiles()).toSeq.flatten
-      .filter(_.isFile).sortBy(_.getName)
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val Chunk = 8192
-    files.foreach { f =>
-      md.update(s"${f.getName}:${f.length}|".getBytes("UTF-8"))
-      val raf = new java.io.RandomAccessFile(f, "r")
-      try {
-        val head = new Array[Byte](math.min(Chunk.toLong, f.length).toInt)
-        raf.readFully(head)
-        md.update(head)
-        if (f.length > Chunk) {
-          val tail = new Array[Byte](
-            math.min(Chunk.toLong, f.length - Chunk).toInt)
-          raf.seek(f.length - tail.length)
-          raf.readFully(tail)
-          md.update(tail)
-        }
-      } finally raf.close()
+  private val tagMemo =
+    scala.collection.concurrent.TrieMap.empty[String, (graft.cube.StarListing.Listing, String)]
+  def contentTag(sfDir: String): String = {
+    val listing =
+      if (!new java.io.File(sfDir).exists()) graft.cube.StarListing.Listing(sfDir, Nil)
+      else graft.cube.StarListing.list(sfDir)
+    tagMemo.get(sfDir).collect { case (l, tag) if l == listing => tag }.getOrElse {
+      val md = java.security.MessageDigest.getInstance("MD5")
+      val Chunk = 8192
+      listing.files.foreach { e =>
+        val f = new java.io.File(sfDir, e.rel)
+        md.update(s"${e.rel}:${f.length}|".getBytes("UTF-8"))
+        val raf = new java.io.RandomAccessFile(f, "r")
+        try {
+          val head = new Array[Byte](math.min(Chunk.toLong, f.length).toInt)
+          raf.readFully(head)
+          md.update(head)
+          if (f.length > Chunk) {
+            val tail = new Array[Byte](
+              math.min(Chunk.toLong, f.length - Chunk).toInt)
+            raf.seek(f.length - tail.length)
+            raf.readFully(tail)
+            md.update(tail)
+          }
+        } finally raf.close()
+      }
+      val tag = md.digest().take(4).map(b => f"$b%02x").mkString
+      tagMemo.put(sfDir, (listing, tag))
+      tag
     }
-    md.digest().take(4).map(b => f"$b%02x").mkString
-  })
+  }
 
   // schema inference (footer reads + file listing) costs ~10-30ms per
   // parquet table; queries re-resolve the same handful of tables over and

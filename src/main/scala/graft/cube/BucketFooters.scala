@@ -25,7 +25,13 @@ object BucketFooters {
     * no UTC-adjusted INT64-micros min/max.
     */
   final case class Bucket(rows: Long, nulls: Map[String, Long],
-                          time: Option[(Long, Long)], timeExact: Boolean)
+                          time: Option[(Long, Long)], timeExact: Boolean) {
+    /** Figures of this bucket's files together with `o`'s. */
+    def +(o: Bucket): Bucket = Bucket(rows + o.rows,
+      nulls.collect { case (c, n) if o.nulls.contains(c) => c -> (n + o.nulls(c)) },
+      (time ++ o.time).reduceOption((a, b) => (math.min(a._1, b._1), math.max(a._2, b._2))),
+      timeExact && o.timeExact)
+  }
 
   /** Totals over a generation: rows per bucket directory, NULL counts of
     * the columns every bucket recorded, and the exact time range when
@@ -37,18 +43,22 @@ object BucketFooters {
 
   /** Footer figures of every bucket of `dir`, persisted into `dir`.
     * Entries of `carriedFrom`'s sidecar are reused for buckets not in
-    * `reread`; every other bucket's footers are read.
+    * `reread`, plus the figures in `added` of files appended to the bucket
+    * since ([[of]]); every other bucket's footers are read.
     */
   def ensure(spark: SparkSession, dir: String, bucketColumn: String,
              timeColumn: String, carriedFrom: Option[String] = None,
-             reread: Set[String] = Set.empty): Totals = {
+             reread: Set[String] = Set.empty,
+             added: Map[String, Bucket] = Map.empty): Totals = {
     val carried = carriedFrom.map(load).getOrElse(Map.empty)
     lazy val conf = spark.sessionState.newHadoopConf()
     val buckets = Option(new java.io.File(dir).listFiles()).toSeq.flatten
       .filter(f => f.isDirectory && f.getName.startsWith(bucketColumn + "="))
       .map { b =>
-        b.getName -> carried.get(b.getName).filterNot(_ => reread(b.getName))
-          .getOrElse(read(conf, b, timeColumn))
+        val n = b.getName
+        n -> carried.get(n).filterNot(_ => reread(n))
+          .map(c => added.get(n).fold(c)(c + _))
+          .getOrElse(read(conf, files(b), timeColumn))
       }.toMap
     save(dir, buckets)
     totalsOf(buckets)
@@ -74,20 +84,23 @@ object BucketFooters {
       else Some((times.map(_._1).min, times.map(_._2).max)))
   }
 
-  private def read(conf: org.apache.hadoop.conf.Configuration, bucketDir: java.io.File,
+  /** Footer figures of `files` taken together. */
+  def of(spark: SparkSession, files: Seq[java.io.File], timeColumn: String): Bucket =
+    read(spark.sessionState.newHadoopConf(), files, timeColumn)
+
+  private def files(d: java.io.File): Seq[java.io.File] =
+    StarListing.dataFiles(d.toPath).map(_.toFile)
+
+  private def read(conf: org.apache.hadoop.conf.Configuration, files: Seq[java.io.File],
                    timeColumn: String): Bucket = {
     import org.apache.parquet.schema.LogicalTypeAnnotation
-    def files(d: java.io.File): Seq[java.io.File] =
-      Option(d.listFiles()).toSeq.flatten
-        .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
-        .flatMap(f => if (f.isDirectory) files(f) else Seq(f))
     var rows = 0L
     val nulls = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
     val unrecorded = scala.collection.mutable.Set.empty[String]
     var tmin = Long.MaxValue
     var tmax = Long.MinValue
     var timeExact = true
-    for (f <- files(bucketDir)) {
+    for (f <- files) {
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
           new org.apache.hadoop.fs.Path(f.toURI), conf))

@@ -35,7 +35,7 @@ final case class RollupMeta(
     kmvK: Int = org.apache.spark.sql.graft.KmvSketch.DefaultK,
     /** Distinct count of each sketched column: EXACT at rollup build, a
       * PROVEN UPPER BOUND after a refresh (the previous value plus the
-      * dirty slice's exact distinct count, see [[CubeRefresh]]). Either is
+      * appended rows' exact distinct count, see [[CubeRefresh]]). Either is
       * the proof obligation for serving `count(DISTINCT)` or TopN from the
       * sketch losslessly — a bound within the sketch's capacity proves the
       * true count is too (approximate NDV stats are not proof)
@@ -252,14 +252,56 @@ object CubeCatalog {
   def invalidatePlan(path: String): Unit = { planCache.remove(path); () }
 
   private def analyzedScan(spark: SparkSession, path: String): LogicalPlan = {
-    val base = planCache.getOrElseUpdate(path, {
-      val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      classic.read.parquet(path).queryExecution.analyzed
-    })
+    val base = planCache.getOrElseUpdate(path, analyzed(spark, path))
     base.transform {
       case lr: LogicalRelation => lr.newInstance()
     }
   }
+
+  private def analyzed(spark: SparkSession, path: String): LogicalPlan =
+    read(spark, path).asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+      .queryExecution.analyzed
+
+  /** Cache the analyzed scan of a freshly published directory, so the
+    * first query after a refresh neither lists it nor reads a footer.
+    */
+  def prime(spark: SparkSession, path: String): Unit = {
+    planCache.put(path, analyzed(spark, path)); ()
+  }
+
+  /** A parquet directory the engine wrote (cube, lattice node), read with
+    * the schema Spark recorded in one data file's footer: Spark's own
+    * inference of a parquet schema runs a job even for one file, and
+    * every file of these directories was written with the same schema.
+    * Partition columns are discovered from the directory names as usual.
+    * Falls back to inference when no file carries a recorded schema.
+    */
+  def read(spark: SparkSession, path: String): org.apache.spark.sql.DataFrame =
+    dataSchema(spark, path).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+
+  /** The rows of some leaf directories (relative paths) of such a
+    * directory, with the partition columns their paths name.
+    */
+  private[cube] def readLeaves(spark: SparkSession, path: String,
+                               leaves: Seq[String]): org.apache.spark.sql.DataFrame = {
+    val r = spark.read.option("basePath", path)
+    dataSchema(spark, path).fold(r)(r.schema)
+      .parquet(leaves.map(l => new java.io.File(path, l).getPath): _*)
+  }
+
+  private def dataSchema(spark: SparkSession, path: String)
+      : Option[org.apache.spark.sql.types.StructType] =
+    StarListing.dataFiles(java.nio.file.Paths.get(path)).headOption
+      .filter(f => java.nio.file.Files.isRegularFile(f)).flatMap { f =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.toUri), spark.sessionState.newHadoopConf()))
+        try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+            .get("org.apache.spark.sql.parquet.row.metadata"))
+          .map(org.apache.spark.sql.types.DataType.fromJson(_)
+            .asInstanceOf[org.apache.spark.sql.types.StructType])
+        finally reader.close()
+      }
 
   /** A fresh logical plan over the materialized cube (new expression ids per
     * call, so one query can host several rewrites).

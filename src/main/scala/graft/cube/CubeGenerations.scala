@@ -225,6 +225,11 @@ object CubeGenerations {
     }
   }
 
+  /** Remove a file or directory tree. */
+  private[cube] def rmTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
+  }
+
   /** Test/maintenance helper: remove every generation, the pointer and
     * the root data — the fresh-disk state.
     */

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
   *
   * Each dimension NDV is the estimate of an HLL sketch that is stored
   * beside the stats (`_graft_ndv_sketches.json`), so a refresh can union
-  * the previous generation's sketches with those of its dirty slice
+  * the previous generation's sketches with those of the appended rows
   * ([[merge]]) instead of re-reading the cube.
   */
 object CubeStats {
@@ -28,7 +28,7 @@ object CubeStats {
   def ensure(spark: SparkSession, info: CubeInfo, path: String): Map[String, Long] =
     load(info, path).getOrElse {
       val (stats, sketches, _) = graft.Graft.withoutRewrites(spark) {
-        measure(info, spark.read.parquet(path))
+        measure(info, CubeCatalog.read(spark, path))
       }
       save(path, stats, sketches)
       stats

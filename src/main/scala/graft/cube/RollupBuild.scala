@@ -32,7 +32,7 @@ object RollupBuild {
     // builds and proofs run with rewrites OFF: the measurement must never
     // route through the sketches it is meant to vouch for
     graft.Graft.withoutRewrites(spark) {
-      def flat = spark.read.parquet(cube.cubePath)
+      def flat = CubeCatalog.read(spark, cube.cubePath)
       // attach the node's CURRENT generation (CubeGenerations) — after a
       // refresh the serving dir is a `.gen-N` sibling of the build root
       val ru0r = ru0.copy(path = CubeGenerations.currentDir(ru0.path))

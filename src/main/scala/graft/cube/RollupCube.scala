@@ -293,9 +293,20 @@ object RollupCube {
       if (groupCols.forall(c => coarseDims.contains(c) || c == "g_tbucket"))
         coarsePath(sfDir)
       else rollupPath(sfDir)
-    spark.read.parquet(CubeGenerations.currentDir(path))
+    val node = CubeCatalog.all.flatMap(_.rollups)
+      .find(r => CubeGenerations.rootOf(r.path) == path)
+    val served = CubeCatalog.read(spark, CubeGenerations.currentDir(path))
       .groupBy(groupCols.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
+    // `avg` merges as sum(sum_x) / sum(cnt), which counts a NULL x in the
+    // denominator: sound only when the node proves x has no NULL
+    merge.avgSources(served.columns).foreach { src =>
+      val nulls = node.flatMap(_.exactNullCount.get(src))
+      if (!nulls.contains(0L)) throw new IllegalStateException(
+        s"avg of $src from the rollup at $path needs a proved NULL count of 0, " +
+          s"found ${nulls.fold("none")(_.toString)}: aggregate the flat cube instead")
+    }
+    served
   }
 
   /** Merged metric expressions for use with [[reaggregate]]. */
@@ -311,7 +322,11 @@ object RollupCube {
       */
     def avgOf(sourceCol: String): Column =
       (sum(col(sumMetrics(sourceCol))).cast("double") / sum(col("cnt")))
-        .as("avg_" + sumMetrics(sourceCol).stripPrefix("sum_"))
+        .as(avgName(sourceCol))
+    private def avgName(sourceCol: String) = "avg_" + sumMetrics(sourceCol).stripPrefix("sum_")
+    /** Source metrics of the [[avgOf]] columns among `columns`. */
+    private[cube] def avgSources(columns: Seq[String]): Seq[String] =
+      sumMetrics.keys.filter(s => columns.contains(avgName(s))).toSeq.sorted
     /** Approximate distinct customers from merged HLL sketches. */
     def customers: Column =
       hll_sketch_estimate(hll_union_agg(col("custkey_hll"))).as("n_cust_approx")

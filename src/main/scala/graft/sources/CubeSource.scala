@@ -148,7 +148,7 @@ object CubeSource {
     val destPath = CubeGenerations.currentDir(destPath0)
     if (!new java.io.File(destPath, "_SUCCESS").exists()) {
       // listed BEFORE the sources are read, for CubeRefresh's detection
-      val listing = FactListing.listFact(info, tablePaths)
+      val listing = StarListing.listStar(info, tablePaths)
       val flat = flatten(spark, info, tablePaths, schemas)
       val bucketed = flat
         .withColumn(info.timeBucketColumn, TpchCube.bucketExpr(info.timeColumn))
@@ -161,7 +161,8 @@ object CubeSource {
           (info.timeBucketColumn +: info.clusterDims).map(col): _*)
       clustered.write.mode("overwrite")
         .partitionBy(info.timeBucketColumn).parquet(destPath)
-      listing.foreach(l => FactListing.save(destPath, FactListing.readBy(l, flat)))
+      listing.foreach(l => StarListing.save(destPath, StarListing.withFigures(
+        spark.sessionState.newHadoopConf(), info, StarListing.readBy(l, flat))))
       BucketFooters.ensure(spark, destPath, info.timeBucketColumn, info.timeColumn)
     }
     val stats = CubeStats.ensure(spark, info, destPath)

@@ -12,10 +12,11 @@ import graft.sources.CubeSource
 /** Incremental cube refresh: grow the fact table (new months AND a
   * late-arriving mid-month batch), refresh, and prove the cube + every
   * rollup node serve results identical to a from-scratch build — while only
-  * the dirty buckets were rewritten. The first case rewrites the fact table
-  * in place (the fallback path: whole-table detection and whole-generation
-  * stats); the append cases add a file and rewrite nothing (detection from
-  * the new file, stats and proofs from the dirty slice).
+  * the changed buckets were written. The first case rewrites the fact table
+  * in place (the full path: per-bucket count detection, dirty buckets
+  * rewritten, whole-generation stats); the append cases add a file and take
+  * the delta path (the appended rows and node partials written beside the
+  * old files, stats and proofs merged from the delta).
   */
 class CubeRefreshSpec extends AnyFunSuite {
   import TestSpark._
@@ -68,6 +69,8 @@ class CubeRefreshSpec extends AnyFunSuite {
 
     val result = CubeRefresh.refresh(spark, before, Tables.flat(spark, workDir))
     val after = result.refreshed
+    assert(result.path == CubeRefresh.FullPath &&
+      result.fullReason.contains("fact file rewritten"), result.fullReason)
 
     // dirty set = the grown mid-month bucket + every later month; nothing
     // before the cutoff month was touched
@@ -240,7 +243,7 @@ class CubeRefreshSpec extends AnyFunSuite {
     val after = result.refreshed
 
     // detection scanned only the new file: exactly its two buckets
-    assert(result.incremental)
+    assert(result.path == CubeRefresh.DeltaPath, result.fullReason)
     assert(result.dirtyBuckets == Seq(lateBucket, newBucket), result.dirtyBuckets.toString)
 
     // the engine reports contiguous phases that add up to the refresh
@@ -250,7 +253,8 @@ class CubeRefreshSpec extends AnyFunSuite {
     assert(math.abs(phaseSum - wallMs) <= 0.05 * wallMs,
       f"phases sum to $phaseSum%.0f ms of a $wallMs%.0f ms refresh")
     assert(graft.plans.QueryHistory.snapshot.exists(e =>
-      e.served == "build:refresh:refresh_append" && e.planHead.contains("stats=")))
+      e.served == "build:refresh:refresh_append" && e.planHead.contains("stats=") &&
+        e.planHead.contains("path=delta")))
 
     // no whole-cube pass: the one job that reads as many records as the
     // cube holds is the flattening join's scan of the raw fact table
@@ -259,8 +263,9 @@ class CubeRefreshSpec extends AnyFunSuite {
     assert(big.size <= 1, s"jobs reading >= $cubeRows records: $big of $jobRecords")
     assert(jobRecords.values.sum < 2 * cubeRows,
       s"the refresh read ${jobRecords.values.sum} records for a $cubeRows-row cube")
-    assert(result.cubeRowsWritten == spark.read.parquet(after.cubePath)
-      .filter(col("g_tbucket").isin(lateBucket, newBucket)).count())
+    // the delta alone was written: the appended flat rows (every held
+    // row joins), not the dirty buckets' old rows
+    assert(result.cubeRowsWritten == held.count())
 
     // exact figures match a from-scratch build on the same sources; the
     // NDV proof values and the lag bounds are sound upper bounds
@@ -300,7 +305,7 @@ class CubeRefreshSpec extends AnyFunSuite {
     Seq("refresh_append", "refresh_append_scratch").foreach(CubeCatalog.unregister)
   }
 
-  test("a fact file appended after the flattening frame was built is picked up next time") {
+  test("a flattening frame built before a fact file landed still absorbs it") {
     val (newBucket, lateBucket, held) = seedAppendDir()
     val before = build("refresh_stale_frame", "stale")
     // the frame's file index is fixed here, before the file lands
@@ -310,16 +315,17 @@ class CubeRefreshSpec extends AnyFunSuite {
     def rawRows() = Graft.withoutRewrites(spark)(
       CubeSource.flatten(spark, before.info, tablePaths).count())
 
-    // detection sees the new file, but the frame cannot supply its rows
+    // the delta reads the appended file through the frame's fact relation
+    // with its file index swapped, so the frame's stale index does not matter
     val first = CubeRefresh.refresh(spark, before, staleFlat)
+    assert(first.path == CubeRefresh.DeltaPath, first.fullReason)
     assert(first.dirtyBuckets == Seq(lateBucket, newBucket), first.dirtyBuckets.toString)
-    assert(spark.read.parquet(first.refreshed.cubePath).count() < rawRows())
+    assert(spark.read.parquet(first.refreshed.cubePath).count() == rawRows())
 
-    // so the file was not recorded as absorbed: the next refresh scans it
+    // and the file was recorded as absorbed: the next refresh finds nothing
     val second = CubeRefresh.refresh(spark, first.refreshed,
       CubeSource.flatten(spark, before.info, tablePaths))
-    assert(second.incremental)
-    assert(second.dirtyBuckets == Seq(lateBucket, newBucket), second.dirtyBuckets.toString)
+    assert(second.dirtyBuckets.isEmpty, second.dirtyBuckets.toString)
     assert(spark.read.parquet(second.refreshed.cubePath).count() == rawRows())
     CubeCatalog.unregister("refresh_stale_frame")
   }
@@ -335,7 +341,7 @@ class CubeRefreshSpec extends AnyFunSuite {
     Tables.invalidateCache()
     val result = CubeRefresh.refresh(spark, CubeCatalog.get(name).get,
       CubeSource.flatten(spark, info, tablePaths))
-    assert(result.incremental && result.dirtyBuckets.nonEmpty)
+    assert(result.path == CubeRefresh.DeltaPath && result.dirtyBuckets.nonEmpty)
 
     // a day-aligned, month-unaligned interval: only the day node serves it
     def q1(df: DataFrame) = df
@@ -425,7 +431,7 @@ class CubeRefreshSpec extends AnyFunSuite {
       stop.set(true)
       readers.foreach(_.join(60000))
     }
-    assert(result.incremental)
+    assert(result.path == CubeRefresh.DeltaPath, result.fullReason)
     assert(violations.isEmpty, violations.toArray.mkString("; "))
     // the previous generation served while the refresh ran
     assert(stale.get() >= 1 && stale.get() + fresh.get() >= 2 * queries.size,

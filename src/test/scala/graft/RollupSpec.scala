@@ -67,6 +67,38 @@ class RollupSpec extends AnyFunSuite {
     }
   }
 
+  test("avg from the rollup fails loudly for a metric with NULL values") {
+    val dir = "/tmp/graft_rollup_null_metric"
+    def rm(f: java.io.File): Unit = { Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); () }
+    rm(new java.io.File(dir))
+    for (t <- Tables.starTables) {
+      val df = spark.read.parquet(Tables.path(sf, t))
+      (if (t != "lineitem") df
+       else df.withColumn("l_quantity", when(col("l_orderkey") % 5 === 0,
+         lit(null).cast(df.schema("l_quantity").dataType)).otherwise(col("l_quantity"))))
+        .coalesce(1).write.mode("overwrite").parquet(Tables.path(dir, t))
+    }
+    Tables.invalidateCache()
+    try {
+      val err = intercept[IllegalStateException](RollupCube.reaggregate(spark, dir,
+        Seq("c_mktsegment"), Seq(RollupCube.merge.avgOf("l_quantity"))))
+      assert(err.getMessage.contains("l_quantity"), err.getMessage)
+      // a NULL-free metric of the same node still answers, exactly
+      val got = RollupCube.reaggregate(spark, dir, Seq("c_mktsegment"),
+          Seq(RollupCube.merge.avgOf("l_extendedprice")))
+        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      val want = Graft.withoutRewrites(spark)(Tables.flat(spark, dir).groupBy("c_mktsegment")
+        .agg(sum(col("l_extendedprice").cast("decimal(28,6)")).cast("double") / count(lit(1)))
+        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap)
+      assert(got.nonEmpty && got == want)
+    } finally {
+      graft.cube.CubeCatalog.unregister(s"tpch_flat_${new java.io.File(dir).getName}")
+      (graft.cube.TpchCube.cubePath(dir) +: RollupCube.metas(dir).map(_.path))
+        .foreach(graft.cube.CubeGenerations.wipeAll)
+      Tables.invalidateCache()
+    }
+  }
+
   test("rollup refuses groupings outside its dimension set") {
     intercept[IllegalArgumentException] {
       RollupCube.reaggregate(spark, sf, Seq("l_partkey"), Seq(RollupCube.merge.cnt))
